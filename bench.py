@@ -1,7 +1,7 @@
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line with per-query and
-total wall-clock seconds.
+local[session.local_cores()] and prints ONE JSON line with per-query
+and total wall-clock seconds.
 
 Timing protocol: one warm-up pass of a trivial action to absorb JVM/
 session start-up, then each query is executed once with a count()-style
@@ -9,7 +9,7 @@ materialization (collect for small results) and timed individually.
 
 Same-day DuckDB control (VERDICT r5 item 1): after the Spark pass,
 each oracled query's DuckDB SQL runs IN THIS SAME PROCESS/RUN over the
-same parquet (threads = $SPARK_GRAFT_CPUS, fetchall materialization,
+same parquet (threads = the Spark core count, fetchall materialization,
 min-of-3 — the BENCH_BASELINE.md protocol), and the JSON line carries
 `duckdb` wall-clocks and `ratio` per query and in total. This bakes
 the like-for-like comparison into every BENCH artifact so host-speed
@@ -68,10 +68,10 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
     from flink_exercise_spark import registry
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
+
+    cpus = local_cores()
 
     # Local-mode measurement conf — NOT the cluster defaults. Measured
     # on this host (BENCH_r03 profiling): a trivial two-exchange query
@@ -164,19 +164,24 @@ def main() -> None:
             # queries that run after the dedup family without this).
             spark.catalog.clearCache()
 
+    # A failed query (-1.0) drops out of the total, so the total alone
+    # reads FASTER when queries fail: n_failed travels with it, and a
+    # run with n_failed > 0 is not comparable to one without.
     total = round(sum(v for v in timings.values() if v >= 0), 4)
+    n_failed = sum(1 for v in timings.values() if v < 0)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_queries_total_wall_clock",
         "value": total,
         "unit": "sec",
+        "n_failed": n_failed,
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
 
     if os.environ.get("SPARK_GRAFT_DUCKDB", "1") != "0":
         duck_raw = _duckdb_control(
-            specs, names, timings, sf_dir, int(cpus), budget
+            specs, names, timings, sf_dir, cpus, budget
         )
         matched = [
             n for n, v in duck_raw.items()
@@ -187,7 +192,7 @@ def main() -> None:
         out["duckdb"] = {
             "value": round(duck_total, 4),
             "unit": "sec",
-            "threads": int(cpus),
+            "threads": cpus,
             "queries": {n: round(v, 4) for n, v in duck_raw.items()},
         }
         out["ratio"] = {
@@ -296,6 +301,7 @@ def main() -> None:
         "unit": "sec",
         "sf": out["sf"],
         "n_queries": len(timings),
+        "n_failed": n_failed,
     }
     if "ratio" in out:
         summary["duckdb_total_s"] = out["duckdb"]["value"]

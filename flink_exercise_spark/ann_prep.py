@@ -149,8 +149,7 @@ def run_ann_batch(
         if kmeans_iters > 0:
             # an append NEVER retrains (pinned models are the append
             # contract) — dropping the option silently would leave the
-            # operator believing a recluster happened (the loud-fail
-            # convention of resolve_multimodal_pairs; code-review r12)
+            # operator believing a recluster happened
             raise ValueError(
                 "--kmeans-iters only applies to a bootstrap or "
                 "--rebuild; an append assigns against the live "

@@ -46,11 +46,6 @@ def requests_per_host(events: DataFrame, key: str = "user_id") -> DataFrame:
     return events.groupBy(key).agg(F.count(F.lit(1)).alias("n_requests"))
 
 
-def count_events(events: DataFrame) -> DataFrame:
-    """A2 — global element count (StreamingJob.scala:153-155)."""
-    return events.groupBy().agg(F.count(F.lit(1)).alias("n_events"))
-
-
 def first_event_per_host(events: DataFrame, key: str = "user_id") -> DataFrame:
     """A3 — stateful distinct / first-record-per-key
     (StreamingJob.scala:157-165, ``filterWithState`` over Set state).
@@ -63,11 +58,6 @@ def first_event_per_host(events: DataFrame, key: str = "user_id") -> DataFrame:
         F.min("event_id").alias("first_event_id"),
         F.min_by("event_type", "event_id").alias("first_event_type"),
     )
-
-
-def distinct_hosts(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """A3+A4 — count of distinct keys (StreamingJob.scala:167-169)."""
-    return events.groupBy().agg(F.countDistinct(key).alias("n_unique_users"))
 
 
 def windowed_distinct_hosts(events: DataFrame, key: str = "user_id") -> DataFrame:
@@ -209,13 +199,6 @@ def windowed_floor_avg(events: DataFrame, value: str = "value") -> DataFrame:
     )
 
 
-def windowed_avg(events: DataFrame, value: str = "value") -> DataFrame:
-    """A7 idiomatic variant — true SQL AVG (NULLs excluded)."""
-    return events.groupBy(win_start("ts", WINDOW_31D)).agg(
-        F.round(F.avg(value), 4).alias("avg_value")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Registry entries (driver-checked surface)
 # ---------------------------------------------------------------------------
@@ -244,8 +227,6 @@ def q_ref_q1(spark, sf_dir):
 
 @register(
     "ref_q1_top_host_str",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH c AS (
@@ -324,8 +305,6 @@ def cumulative_distinct_hosts(events: DataFrame, key: str = "user_id") -> DataFr
 
 @register(
     "ref_q2_cumulative_distinct",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH firsts AS (
@@ -377,8 +356,6 @@ def q_ref_q3(spark, sf_dir):
 
 @register(
     "a1_requests_per_host",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="SELECT user_id, count(*) AS n_requests FROM events GROUP BY 1",
     doc="A1: keyed count",
@@ -390,8 +367,6 @@ def q_a1(spark, sf_dir):
 
 @register(
     "a2_count_events",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     # A2 (global count) and A4 (exact distinct count) in one entry:
     # both are single-pass global aggregates over the same scan, and
@@ -415,8 +390,6 @@ def q_a2(spark, sf_dir):
 
 @register(
     "a3_first_event_per_host",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT user_id, min(event_id) AS first_event_id,
@@ -445,8 +418,6 @@ def q_a4_approx(spark, sf_dir):
 
 @register(
     "a6_top3_hosts_per_window",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH c AS (
@@ -470,16 +441,7 @@ def q_a6_top3(spark, sf_dir):
 
 @register(
     "events_type_stats",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT event_type, count(*) AS n_events,
            round(avg(value), 4) AS avg_value,
@@ -512,16 +474,7 @@ def q_type_stats(spark, sf_dir):
 
 @register(
     "a1_running_counts_analytic",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     # Batch rendering of Flink's per-record update stream (A1): the
     # running count/sum each record would have emitted, via OVER
     # windows with a deterministic (ts, event_id) order.
@@ -554,16 +507,7 @@ def q_running_counts(spark, sf_dir):
 
 @register(
     "events_json_props",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT event_type,
            round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4)

@@ -251,16 +251,7 @@ def range_join_counts(
 
 @register(
     "range_join_concurrent_events",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_custom_op_fuzz.py quadratic-reference fuzz
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     # The oracle spells the band as BETWEEN (two inequalities), which
     # DuckDB plans as an IEJoin — an abs() form defeats that and
     # nested-loops, measured unrunnable at 1M rows in ANY engine,
@@ -293,8 +284,6 @@ def q_range_join(spark, sf_dir):
 
 @register(
     "asof_purchase_attribution",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     # DuckDB's native ASOF JOIN is the oracle for our windowed
     # composition; >= semantics on the timestamp, per-user key.

@@ -260,8 +260,6 @@ def melody_fixture_corpus(spark) -> DataFrame:
 
 @register(
     "audio_neardup_pairs",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_audio.py pure-python re-derivation of the
     # frozen VALUES oracle.
     # VALUES oracle: hand-derived from the MELODIES table above (the

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_exercise_spark.functions.vectors import l2_norm_expr, with_norm
+from flink_exercise_spark.functions.vectors import l2_norm_expr
 from flink_exercise_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
@@ -596,7 +596,7 @@ def _adc_fold() -> Column:
     frame carrying ``codes`` (tinyint array) and a joined LUT row
     (``lut``, ``_nc``). ONE implementation — the one-based element_at
     offset and the index arithmetic must never fork between the
-    exhaustive and the cell-filtered scorer (code-review r8)."""
+    scorers that use it (code-review r8)."""
     return F.aggregate(
         F.zip_with(
             F.col("codes"),
@@ -608,19 +608,6 @@ def _adc_fold() -> Column:
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def pq_adc_scores(store: DataFrame, luts: DataFrame) -> DataFrame:
-    """Approximate dot products over the CODE store: score =
-    sum_j lut[j * n_codes + codes[j]] — m lookups per (query,
-    candidate), the corpus-sized relation carries only tinyint codes.
-    ``(query_id, vec_id, adot)``; divide by stored norms upstream if a
-    cosine-shaped score is needed (ranking is scale-invariant per
-    query since the query norm is constant)."""
-    joined = store.crossJoin(F.broadcast(luts))
-    return joined.select(
-        "query_id", "vec_id", (_adc_fold() / F.col("norm")).alias("adot")
     )
 
 
@@ -652,52 +639,6 @@ def _exact_rescore_topk(
     return _rank_top_k(rescored, k)
 
 
-def knn_pq(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = TOP_K,
-    m: int = 8,
-    n_codes: int = 16,
-    shortlist: int | None = None,
-) -> DataFrame:
-    """Exhaustive ANN over the PQ code store (ADC pre-rank) with exact
-    re-scoring — the knn_ivf_int8 contract at the 64x compression
-    level: candidates are ranked by sum of M lookup-table entries (the
-    corpus-sized scan reads M tinyint codes + one norm per vector,
-    never floats), the per-query top ``shortlist`` joins back to the
-    float store, and the final (query_id, neighbor_id, cosine, rank)
-    EQUALS knn_brute_force whenever the shortlist covers the true
-    top-k (guaranteed at shortlist >= corpus size; measured recall at
-    real budgets in tests). Compose with the IVF cell filter for the
-    probed variant — the stores are orthogonal."""
-    if shortlist is None:
-        shortlist = max(8 * k, 64)
-    if shortlist < k:
-        raise ValueError(f"shortlist {shortlist} must be >= k {k}")
-
-    corpus_f = spread(emb.filter(F.col("vec_id") >= n_queries), "vec_id")
-    cbs = pq_codebooks(corpus_f, m=m, n_codes=n_codes)
-    store = pq_encode(corpus_f, cbs, m=m)
-    queries = with_norm(emb.filter(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    luts = pq_adc_lut(queries, cbs, m=m)
-    approx = pq_adc_scores(store, luts).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    short = _rank_top_k(approx, shortlist, score_col="adot").select(
-        "query_id", "neighbor_id"
-    )
-    corpus = with_norm(corpus_f).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    return _exact_rescore_topk(short, corpus, queries, k)
-
-
 def pq_train_codebooks(
     emb: DataFrame,
     m: int = 8,
@@ -711,7 +652,7 @@ def pq_train_codebooks(
     ``pq_encode``/``pq_adc_lut`` consume — train here, encode there
     (the tokenizer/classifier pattern). m model fits of n_codes x
     (dims/m) driver-held state each; the corpus is read per fit (an
-    offline, amortized layout job, the z-order rationale)."""
+    offline, amortized layout job)."""
     from flink_exercise_spark.operators.clustering import kmeans_centroids
 
     _pq_guard(emb, m, vec_col, n_codes)
@@ -735,39 +676,6 @@ def pq_train_codebooks(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def pq_reconstruction_mse(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    vec_col: str = "embedding",
-) -> float:
-    """Mean squared reconstruction error of the PQ store against the
-    float corpus — the quantization-quality scalar that makes codebook
-    comparisons (deterministic vs trained) measurable. One encode pass
-    + one broadcast-codebook lookup join; a single double returns."""
-    store = pq_encode(emb, codebooks, m=m, vec_col=vec_col)
-    joined = (
-        store.join(emb.select("vec_id", vec_col), "vec_id")
-        .crossJoin(F.broadcast(_codebooks_array(codebooks)))
-    )
-    recon = F.flatten(
-        F.zip_with(
-            F.col("codes"),
-            F.sequence(F.lit(0), F.size("codes") - 1),
-            lambda c, j: F.element_at(
-                F.element_at(F.col("_cb"), j.cast("int") + 1),
-                c.cast("int") + 1,
-            ),
-        )
-    )
-    sq = F.aggregate(
-        F.zip_with(recon, F.col(vec_col), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return joined.agg(F.avg(sq)).first()[0]
 
 
 def knn_ivf_pq(

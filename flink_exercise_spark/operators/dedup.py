@@ -108,17 +108,6 @@ def lsh_hot_buckets(
     )
 
 
-def exact_dedup_stats(docs: DataFrame) -> DataFrame:
-    """Corpus-level exact-duplicate accounting."""
-    return docs.groupBy().agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(F.md5("text")).alias("n_distinct_texts"),
-        (F.count(F.lit(1)) - F.countDistinct(F.md5("text"))).alias(
-            "n_dup_docs"
-        ),
-    )
-
-
 def exact_dedup_map(docs: DataFrame) -> DataFrame:
     """Canonical-id mapping: every doc's group keeps min(doc_id)."""
     return docs.select(F.md5("text").alias("text_hash"), "doc_id").groupBy(
@@ -496,12 +485,10 @@ _ORACLE_SHINGLE_CTE = """
 
 @register(
     "dedup_exact_map",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     # Subsumes the former dedup_exact_stats entry: corpus-level
     # accounting (n_docs / n_distinct / n_dups) is a trivial aggregate
-    # over this map, and exact_dedup_stats remains a library operator.
+    # over this map.
     oracle="""
     SELECT md5(text) AS text_hash, min(doc_id) AS canonical_doc_id,
            count(*) AS n_copies
@@ -529,8 +516,6 @@ def _minhash_oracle(k: int = N_MINHASH) -> str:
 
 @register(
     "dedup_minhash_signatures",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
     oracle=_minhash_oracle(),
     doc="8-permutation MinHash signatures over 3-gram shingles "
@@ -573,8 +558,6 @@ def _band_pairs_oracle(k: int = N_MINHASH, r: int = BAND_ROWS) -> str:
 
 @register(
     "dedup_minhash_band_pairs",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
     oracle=_band_pairs_oracle(),
     doc="MinHash-LSH candidate pairs over 3-gram shingles "
@@ -587,8 +570,6 @@ def q_minhash_pairs(spark, sf_dir):
 
 @register(
     "dedup_jaccard_pairs",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Python-set pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH toks AS (
@@ -690,12 +671,7 @@ def lsh_verified_pairs(
 
 @register(
     "dedup_lsh_verified_pairs",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     oracle=f"""
     WITH cands AS (
       {_band_pairs_oracle()}
@@ -925,12 +901,7 @@ def _clusters_oracle_cte() -> str:
 
 @register(
     "dedup_near_dup_clusters",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     # Recursive-CTE transitive closure: cluster_id = min doc_id
     # reachable through the verified-pair graph.
     oracle=f"""
@@ -993,14 +964,7 @@ def cluster_keep_best(
 
 @register(
     "dedup_cluster_keep_best",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # Reuses the transitive-closure CTE; canonical member = max
     # n_chars then min doc_id, stated as max-filter + min rather than
     # a window so the oracle stays deterministic under ties.
@@ -1034,12 +998,7 @@ def q_cluster_keep_best(spark, sf_dir):
 
 @register(
     "dedup_simhash_near_pairs",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     # Value-oracled since r5 (was rows-only): the md5-derived bit
     # construction (_SimhashVocab: bit b of the row = bit b, LSB-first,
     # of the big-endian int over the md5 digest's first 8 bytes) is
@@ -1190,8 +1149,6 @@ def line_dedup(
 
 @register(
     "dedup_line_boilerplate",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pure-python pin: tests/test_rotation_pins.py.
     # Oracle mirror notes: (1) DuckDB's zipped unnest pairs each line
     # with its 1-based position (ordering key only — not emitted);
@@ -1495,8 +1452,6 @@ def _substring_oracle(k: int = SUBSTR_K) -> str:
 
 @register(
     "dedup_exact_substring",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pure-python pin: tests/test_rotation_pins.py.
     oracle=_substring_oracle(),
     doc="Exact-substring dedup (Lee et al. ExactSubstr): token spans "

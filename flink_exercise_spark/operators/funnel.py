@@ -128,8 +128,6 @@ def funnel_summary(
 
 @register(
     "events_funnel_steps",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_funnel.py pandas fixture reference.
     oracle="""
     WITH s0 AS (

@@ -468,8 +468,6 @@ def phash_fixture_corpus(spark) -> DataFrame:
 
 @register(
     "mm_image_phash_pairs",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_image_dedup.py pure-python re-derivation of
     # the frozen VALUES oracle.
     # VALUES oracle: the four perturbed-duplicate pairs with their
@@ -587,12 +585,7 @@ def decontam_benchmark_corpus(spark) -> DataFrame:
 
 @register(
     "mm_image_decontaminate",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_image_dedup.py pHash re-derivation
-    priority=1,
     # VALUES oracle (frozen, re-derived by the pure-python reference
     # in tests/test_image_dedup.py): corpus docs 0/1 (hyper +
     # brightness copy) flag against benchmark 100 (the same hyper

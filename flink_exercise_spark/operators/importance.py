@@ -296,14 +296,7 @@ def _dsir_oracle(n: int = DSIR_N, k: int = DSIR_BUCKETS) -> str:
 
 @register(
     "text_dsir_weights",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_importance.py DSIR python reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_dsir_oracle(),
     doc="DSIR importance weights (Xie et al. 2023): hashed-bigram "
         "log-likelihood ratio of the val-split target model vs the "

@@ -613,14 +613,7 @@ def _incremental_oracle(
 
 @register(
     "dedup_incremental_snapshot",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_incremental.py fixture-vs-reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_incremental_oracle(),
     doc="Incremental cross-snapshot dedup: classify an increment "
         "(doc_id >= 250) against a persisted fingerprint + MinHash "

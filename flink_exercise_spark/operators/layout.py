@@ -1,308 +1,13 @@
-"""Storage layout for scan pruning: z-order (Morton) clustering.
-
-At 100 TB the fastest scan is the one that never happens: parquet
-row-group min/max statistics let the reader skip whole row groups when
-a pushed-down predicate cannot match them — but only if the WRITE
-layout makes the statistics tight. A single-column sort gives perfect
-skipping on that column and none on any other; interleaving the bits
-of several columns (z-order / Morton curve) gives good-not-perfect
-locality on ALL of them at once — the standard multi-dimensional
-clustering trade (Delta's OPTIMIZE ZORDER BY, and the space-filling-
-curve literature in PAPERS.md).
-
-Spark-first shape: the z-value is a pure JVM Column expression (bit
-shifts and masks inside whole-stage codegen — no UDF), the layout job
-is ``repartitionByRange(z).sortWithinPartitions(z)`` (one range
-shuffle, the write stays distributed), and the payoff needs no reader
-cooperation beyond what Catalyst already does: pushed-down filters +
-parquet row-group stats. ``rowgroup_skip_stats`` reads the parquet
-footers and reports the skip fraction — the measurable evidence.
-
-Binning: each dimension is quantile-binned via ``approx_percentile``
-boundaries (size-balanced bins regardless of value skew — min-max
-affine mapping would let one hot key stretch a dimension and starve
-the others' bits). The boundary array is tiny (2^bits - 1 doubles per
-column) and rides into the expression as a broadcast literal via
-``width_bucket``. One aggregation pass over the data computes all
-columns' boundaries together; layout jobs are rare, offline, and
-amortized over every subsequent scan.
+"""Plain-parquet table maintenance: ``merge_upsert`` (updates win on
+key) with partition-scoped rewrites, plus the key-uniqueness guard and
+NULL-safe touched-partition filter it shares with the versioned store
+(operators/manifest.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def interleave_bits(cols: list[Column], bits: int) -> Column:
-    """Morton code: bit i of column j lands at position i*n + j.
-    Generic over the column count; total width n*bits must fit a
-    BIGINT. Inputs must already be non-negative ints < 2^bits (the
-    binned output of ``zorder_value``)."""
-    n = len(cols)
-    if n * bits > 62:
-        raise ValueError(f"{n} cols x {bits} bits exceeds BIGINT")
-    z = F.lit(0).cast("long")
-    for j, c in enumerate(cols):
-        c = c.cast("long")
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(c, i).bitwiseAND(F.lit(1)), i * n + j)
-            )
-    return z
-
-
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = 8
-) -> DataFrame:
-    """Attach ``_zvalue``: quantile-bin each dimension into 2^bits
-    size-balanced buckets, then interleave the bucket indices. One
-    aggregate pass computes every column's boundaries (collected to
-    the driver as 2^bits-1 scalars per column — layout-job model
-    state, not data)."""
-    n_bins = 1 << bits
-    probs = [i / n_bins for i in range(1, n_bins)]
-    aggs = [
-        F.expr(
-            f"approx_percentile(cast(`{c}` as double), "
-            f"array({','.join(str(p) for p in probs)}))"
-        ).alias(c)
-        for c in cols
-    ]
-    bounds = df.agg(*aggs).collect()[0]
-    binned = []
-    for c in cols:
-        bs = [b for b in (bounds[c] or []) if b is not None]
-        if not bs:
-            binned.append(F.lit(0))
-            continue
-        # de-duplicated boundaries (approx_percentile repeats a value
-        # when a bucket's mass sits on one point); bucket index =
-        # #boundaries <= value, a JVM-side HOF over the tiny literal
-        # array (Spark's width_bucket is the uniform 4-arg form only).
-        # The index is then RESCALED to span the full 2^bits range: a
-        # low-cardinality dimension (say 15 distinct values) otherwise
-        # fills only its low bits, and the interleave degenerates to
-        # a sort on whichever dimension reaches the high bits —
-        # exactly the failure z-order exists to avoid.
-        uniq = sorted(set(bs))
-        arr = "array(" + ",".join(repr(b) for b in uniq) + ")"
-        k = len(uniq)
-        # lambda variable deliberately obscure: a bare name like `b`
-        # would SHADOW a data column of the same name inside the HOF
-        # (lambda scope wins), silently binning that column against
-        # itself
-        binned.append(
-            F.expr(
-                f"cast(size(filter({arr}, _zob -> _zob <= cast(`{c}` as "
-                f"double))) * {(1 << bits) - 1} div {k} as int)"
-            )
-        )
-    return df.withColumn("_zvalue", interleave_bits(binned, bits))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    num_files: int = 8,
-) -> None:
-    """The layout job: range-partition on the z-value (so files hold
-    contiguous curve segments), sort within each partition (so row
-    groups inside a file are tight too), write plain parquet. Readers
-    need nothing special — pushed-down predicates + footer stats do
-    the skipping."""
-    (
-        zorder_value(df, cols, bits)
-        .repartitionByRange(num_files, "_zvalue")
-        .sortWithinPartitions("_zvalue")
-        .drop("_zvalue")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def rowgroup_skip_stats(
-    path: str, col: str, lo, hi
-) -> dict[str, int]:
-    """Read the parquet footers under ``path`` and report how many row
-    groups a ``col BETWEEN lo AND hi`` scan must touch — the direct
-    measure of what the layout bought. (pyarrow footer read: metadata
-    only, no data pages.)"""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    total = touched = 0
-    for f in files:
-        md = pq.read_metadata(f)
-        idx = md.schema.to_arrow_schema().get_field_index(col)
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            total += 1
-            if st is None or not st.has_min_max:
-                touched += 1  # no stats -> cannot skip
-            elif not (st.max < lo or st.min > hi):
-                touched += 1
-    return {"row_groups": total, "touched": touched}
-
-
-# --- small-files compaction (the table-maintenance half of layout) ---
-
-
-def parquet_layout_stats(path: str) -> dict[str, int]:
-    """Footer-only layout survey of a parquet directory: file count,
-    total compressed bytes, row count. (pyarrow metadata read — no
-    data pages; at cluster scale this is the metastore/manifest
-    listing, and the seam is this function.)"""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    total_bytes = rows = 0
-    for f in files:
-        md = pq.read_metadata(f)
-        rows += md.num_rows
-        total_bytes += sum(
-            md.row_group(rg).total_byte_size
-            for rg in range(md.num_row_groups)
-        )
-    return {"files": len(files), "bytes": total_bytes, "rows": rows}
-
-
-def compact_parquet(
-    spark,
-    src: str,
-    dst: str,
-    target_bytes: int = 128 << 20,
-    order_by: list[str] | None = None,
-    write_options: dict[str, str] | None = None,
-) -> dict[str, int]:
-    """Rewrite a small-files parquet directory into
-    ``ceil(bytes / target_bytes)`` right-sized files (the OPTIMIZE /
-    compaction maintenance job every long-lived ingest needs: each
-    streaming micro-batch appends a file, and a 100 TB table fed that
-    way becomes millions of footer-reads per scan).
-
-    Sizing comes from the source FOOTERS (compressed bytes), not a
-    row-count heuristic — wide and narrow tables compact to the same
-    on-disk file size. With ``order_by`` the rewrite range-partitions
-    + sorts, restoring cluster order (and row-group min/max skipping)
-    that appends destroyed; without it, a plain repartition suffices.
-    Returns {files_in, files_out, bytes, rows}.
-    """
-    stats = parquet_layout_stats(src)
-    if stats["files"] == 0:
-        # A maintenance job can legitimately sweep a directory before
-        # its first micro-batch lands; spark.read.parquet on it would
-        # die with an unrelated schema-inference error. Nothing to
-        # compact — report it instead of writing anything.
-        return {
-            "files_in": 0,
-            "files_out": 0,
-            "bytes": 0,
-            "rows": 0,
-        }
-    n_out = max(1, -(-stats["bytes"] // target_bytes))
-    df = spark.read.parquet(src)
-    if order_by:
-        out = df.repartitionByRange(n_out, *order_by).sortWithinPartitions(
-            *order_by
-        )
-    else:
-        out = df.repartition(n_out)
-    w = out.write.mode("overwrite")
-    for k, v in (write_options or {}).items():
-        w = w.option(k, v)
-    w.parquet(dst)
-    return {
-        "files_in": stats["files"],
-        "files_out": n_out,
-        "bytes": stats["bytes"],
-        "rows": stats["rows"],
-    }
-
-
-def write_bucketed(
-    df: DataFrame,
-    path: str,
-    table: str,
-    key: str,
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write an EXTERNAL bucketed parquet table: pre-hashed into
-    ``n_buckets`` by Spark's bucket hash so equi-joins and
-    aggregations on ``key`` read the layout instead of shuffling —
-    the other half of the layout story (z-order kills scan I/O;
-    bucketing kills the JOIN shuffle). At 100 TB this is the
-    difference between re-shuffling the fact table on every join and
-    never shuffling it at all: bucket the big tables ONCE on their
-    join key, and every subsequent (key-equal, bucket-count-equal)
-    join is a zero-Exchange sort-merge over co-located files
-    (plan-asserted in test_layout.py).
-
-    ``repartition(n_buckets, key)`` before the write uses the SAME
-    Murmur3-pmod hash as ``bucketBy``, so each write task holds
-    exactly one bucket -> ONE FILE PER BUCKET. That is what lets the
-    reader honor ``sortBy`` metadata (multi-file buckets force a
-    re-sort) and keeps file count = bucket count, not
-    tasks x buckets."""
-    w = (
-        df.repartition(n_buckets, key)
-        .write.format("parquet")
-        .mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(*(sort_cols or [key]))
-    )
-    w.saveAsTable(table)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    dynamic: bool = False,
-) -> None:
-    """Hive-layout partitioned parquet write — the third leg of the
-    layout story (z-order: row-group skipping; bucketing: join
-    shuffle; THIS: partition pruning — a filter on the partition
-    column eliminates whole directories before any footer is read,
-    the coarsest and cheapest skip level at 100 TB).
-
-    ``dynamic=True`` sets partitionOverwriteMode=dynamic for THIS
-    write: overwrite replaces only the partitions present in ``df``
-    and leaves every other partition intact — the daily-refresh
-    pattern (re-land one day of a years-deep table without rewriting
-    or dropping history). Static overwrite (the default) truncates
-    the whole table first. The session conf is restored afterward so
-    a library call cannot silently change unrelated writes'
-    semantics.
-
-    Round-trip dtype note (decided r8): partition values are stored as
-    DIRECTORY NAMES, so the on-read dtype is governed by the reader's
-    ``spark.sql.sources.partitionColumnTypeInference`` (a string
-    ``day=2024-01-01`` comes back as DATE). This writer deliberately
-    does NOT pin that conf: it is a read-side session setting, and a
-    write-side library call mutating read-side inference for the whole
-    session would be the same spooky action this function's try/finally
-    exists to prevent. Callers needing dtype-stable round-trips should
-    write typed partition columns (DATE in, DATE out) or cast on read —
-    tests/test_layout.py demonstrates the cast-on-read form."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "dynamic" if dynamic else "static")
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, old)
 
 
 def _assert_key_unique(updates: DataFrame, key: str) -> int:
@@ -342,10 +47,8 @@ def merge_upsert(
     partition_col: str | None = None,
 ) -> dict[str, int]:
     """MERGE (upsert, updates-win-on-key) into a plain-parquet table —
-    the CDC/daily-correction maintenance job, the fourth leg of the
-    layout story (z-order: scan I/O; bucketing: join shuffle;
-    partitioned write: pruning; THIS: mutation without rewriting the
-    world).
+    the CDC/daily-correction maintenance job: mutation without
+    rewriting the world.
 
     Semantics: rows of ``updates`` replace base rows sharing ``key``;
     other base rows survive; new keys insert. ``updates`` must be

@@ -334,173 +334,3 @@ def q_mm_dedup_front_door(spark, sf_dir):
         "modality",
         F.col("evidence").cast("long").alias("evidence"),
     )
-
-
-def decontaminate_landmarks(
-    corpus_fps: DataFrame,
-    benchmark_fps: DataFrame,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Cross-relation landmark decontamination core, modality-agnostic
-    over any (doc_id, fp) fingerprint relation — serves audio
-    (``audio_spectral_fingerprint``) and video (``video_landmarks``)
-    exactly as ``audio_neardup_pairs`` serves both within-corpus.
-
-    (doc_id, bench_id, n_shared) for corpus docs sharing >=
-    ``min_shared`` distinct fingerprints with a benchmark doc. The
-    benchmark side is fixed-size by production contract, so its
-    distinct landmark relation BROADCASTS and the corpus side never
-    shuffles; no fp_cap is needed — the per-fp candidate fan-out is
-    bounded by the benchmark's size, not the corpus's (the
-    ``decontaminate_images`` argument)."""
-    c = corpus_fps.select("doc_id", "fp").distinct()
-    b = (
-        benchmark_fps.select(F.col("doc_id").alias("bench_id"), "fp")
-        .distinct()
-    )
-    return (
-        c.join(F.broadcast(b), "fp")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.countDistinct("fp").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-
-
-def multimodal_decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    image_max_distance: int | None = None,
-    audio_min_shared: int = 2,
-    video_min_shared: int = 2,
-    video_stride: int | None = None,
-) -> DataFrame:
-    """Benchmark decontamination across the WHOLE modality matrix
-    behind one codegen-routed front door (r13 — the
-    ``multimodal_dup_pairs`` structure pointed at a held-out set):
-    every corpus payload routes to its modality's cross-relation
-    check against the benchmark —
-
-    - images -> pHash Hamming vs the broadcast benchmark hash set
-      (``image_dedup.decontaminate_images``)
-    - audio  -> shared spectral-fingerprint runs vs the broadcast
-      benchmark landmark set (``decontaminate_landmarks``)
-    - video  -> shared frame-pHash landmark runs, same core
-    - other  -> exact md5 equality vs the broadcast benchmark hashes
-    - exact-byte FLOOR for audio/video: a byte-identical clip too
-      short for min_shared landmark runs is still flagged (evidence
-      0), with the anti-join so landmark-proved pairs don't
-      double-report — the ``multimodal_dup_pairs`` floor, verbatim
-      reasoning.
-
-    Output: (doc_id, bench_id, modality, evidence) — evidence is the
-    Hamming distance (image), shared-run count (audio/video), or 0
-    (exact bytes). Modalities are routed per RELATION, so a corpus
-    image is never compared against a benchmark audio clip.
-
-    Scale shape: the benchmark reduces to model-sized feature
-    relations (one BIGINT per image, landmark rows per clip, one md5
-    per payload) that all broadcast; corpus bytes cross once into
-    their own modality's Arrow kernel and the corpus never shuffles
-    payloads or features — every join probes a broadcast side."""
-    from flink_exercise_spark.operators.image_dedup import (
-        decontaminate_images,
-        image_phash,
-    )
-
-    routed_c = corpus.select(
-        "doc_id", "payload", modality_expr().alias("modality")
-    )
-    routed_b = benchmark.select(
-        "doc_id", "payload", modality_expr().alias("modality")
-    )
-
-    def side(routed: DataFrame, modality: str) -> DataFrame:
-        return routed.filter(F.col("modality") == modality).select(
-            "doc_id", "payload"
-        )
-
-    image_flags = decontaminate_images(
-        image_phash(side(routed_c, "image")),
-        image_phash(side(routed_b, "image")),
-        **(
-            {}
-            if image_max_distance is None
-            else {"max_distance": image_max_distance}
-        ),
-    ).select(
-        "doc_id",
-        "bench_id",
-        F.lit("image").alias("modality"),
-        F.col("hamming").cast("long").alias("evidence"),
-    )
-    audio_flags = decontaminate_landmarks(
-        audio_spectral_fingerprint(side(routed_c, "audio")),
-        audio_spectral_fingerprint(side(routed_b, "audio")),
-        min_shared=audio_min_shared,
-    ).select(
-        "doc_id",
-        "bench_id",
-        F.lit("audio").alias("modality"),
-        F.col("n_shared").cast("long").alias("evidence"),
-    )
-    vid_kwargs = {} if video_stride is None else {"stride": video_stride}
-    video_flags = decontaminate_landmarks(
-        video_landmarks(side(routed_c, "video"), **vid_kwargs),
-        video_landmarks(side(routed_b, "video"), **vid_kwargs),
-        min_shared=video_min_shared,
-    ).select(
-        "doc_id",
-        "bench_id",
-        F.lit("video").alias("modality"),
-        F.col("n_shared").cast("long").alias("evidence"),
-    )
-
-    def md5_rel(routed: DataFrame, modalities: tuple[str, ...],
-                id_alias: str) -> DataFrame:
-        return routed.filter(
-            F.col("modality").isin(*modalities)
-        ).select(
-            F.col("doc_id").alias(id_alias),
-            "modality",
-            F.md5("payload").alias("_h"),
-        )
-
-    other_flags = (
-        md5_rel(routed_c, ("other",), "doc_id")
-        .join(
-            F.broadcast(md5_rel(routed_b, ("other",), "bench_id")),
-            ["_h", "modality"],
-        )
-        .select(
-            "doc_id",
-            "bench_id",
-            "modality",
-            F.lit(0).cast("long").alias("evidence"),
-        )
-    )
-    landmark_flags = audio_flags.unionByName(video_flags)
-    av_floor = (
-        md5_rel(routed_c, ("audio", "video"), "doc_id")
-        .join(
-            F.broadcast(
-                md5_rel(routed_b, ("audio", "video"), "bench_id")
-            ),
-            ["_h", "modality"],
-        )
-        .select(
-            "doc_id",
-            "bench_id",
-            "modality",
-            F.lit(0).cast("long").alias("evidence"),
-        )
-        .join(
-            landmark_flags.select("doc_id", "bench_id"),
-            ["doc_id", "bench_id"],
-            "left_anti",
-        )
-    )
-    return (
-        image_flags.unionByName(landmark_flags)
-        .unionByName(av_floor)
-        .unionByName(other_flags)
-    )

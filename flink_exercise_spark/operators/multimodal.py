@@ -1035,8 +1035,6 @@ def resize_images(with_payload: DataFrame, target: int = 64) -> DataFrame:
 
 @register(
     "mm_binary_metadata",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     # The engine hashes the BINARY payload directly (binary-safe).
     # DuckDB's md5 only accepts VARCHAR, but it hashes the string's
@@ -1061,8 +1059,6 @@ def q_binary_meta(spark, sf_dir):
 
 @register(
     "mm_decode_features",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pure-python pin: tests/test_rotation_pins.py.
     # Value-oracled since r5 (was rows-only): FakeImageCodec.decode is
     # pure md5-byte arithmetic (width/height from digest bytes 0-1,
@@ -1094,8 +1090,6 @@ def q_decode_features(spark, sf_dir):
 
 @register(
     "mm_frame_sample",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
     # The fake prober's arithmetic (md5-derived frame count, integer
     # frame timestamps, per-frame content hash) is reproduced exactly
@@ -1125,11 +1119,7 @@ def q_frame_sample(spark, sf_dir):
 
 @register(
     "mm_audio_energy",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
-    # Promoted back for r6 (demoted in r5, driver-green r4): the
-    # rotation contract requires a driver pass within two rounds.
     # The fake prober's arithmetic (md5-derived rate/window count,
     # integer window timestamps, md5-derived energy stand-in) is
     # reproduced exactly in SQL, so this Pandas-UDF fan-out op is
@@ -1166,8 +1156,6 @@ def q_audio_energy(spark, sf_dir):
 
 @register(
     "mm_resize_thumbs",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pure-python pin: tests/test_rotation_pins.py.
     # Value-oracled since r6 (was rows-only): the registered form
     # renders the BINARY thumb as lowercase hex — the cross-engine

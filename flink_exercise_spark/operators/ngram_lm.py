@@ -286,14 +286,7 @@ WHERE {sw_d}
 
 @register(
     "text_ngram_logprob",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_ngram_lm.py fixture python reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_lm_oracle(train_where="TRUE", score_where="TRUE"),
     doc="n-gram LM quality gate (KenLM-shaped perplexity filter): "
         "add-one-smoothed bigram LM fitted on the corpus, every "
@@ -315,14 +308,7 @@ LM_SPLIT = 250
 
 @register(
     "text_lm_cross_score",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_ngram_lm.py cross-corpus OOV reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_lm_oracle(
         train_where=f"doc_id < {LM_SPLIT}",
         score_where=f"{{t}}.doc_id >= {LM_SPLIT}",
@@ -656,12 +642,8 @@ WHERE {sw_d}
 
 @register(
     "text_lm_backoff_trigram",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_ngram_lm.py::test_backoff_fixture_matches_py
     # thon_reference.
-    # priority=0: takes the window seat reserved by the r10 rotation
-    # for this entry's FIRST driver pass.
     oracle=_backoff_oracle(
         train_where=f"doc_id < {LM_SPLIT}",
         score_where=f"{{t}}.doc_id >= {LM_SPLIT}",

@@ -116,37 +116,9 @@ def pack_chunks(
     )
 
 
-def packing_profile(
-    docs: DataFrame, context_len: int = CONTEXT_LEN
-) -> DataFrame:
-    """Corpus-level packing quality: chunk count, boundary-crossing
-    docs, and the fraction of documents left whole — the metrics a
-    packing strategy is tuned against."""
-    placed = pack_chunks(docs, context_len)
-    return placed.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        (F.floor((F.max(F.col("start_tok") + F.col("n_tok")) - 1)
-                 / context_len) + 1).alias("n_chunks"),
-        F.sum((F.col("n_chunks_spanned") > 1).cast("long")).alias(
-            "n_split_docs"
-        ),
-        F.round(
-            F.avg((F.col("n_chunks_spanned") == 1).cast("double")), 4
-        ).alias("whole_doc_ratio"),
-    )
-
-
 @register(
     "pipeline_pack_chunks",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_packing.py::test_matches_naive_python
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # The oracle is the NAIVE single-window statement of the same
     # math — one global running sum — pinning that the distributed
     # two-pass prefix-sum decomposition is exact.
@@ -186,67 +158,3 @@ def packing_profile(
 )
 def q_pack_chunks(spark, sf_dir):
     return pack_chunks(load_table(prep(spark), sf_dir, "documents"))
-
-
-# --- training-shard writer (the sink side of concat-and-chunk) ---
-
-SHARD_TOKENS = 64 * CONTEXT_LEN  # default shard budget: 64 chunks
-
-
-def shard_assignments(
-    docs: DataFrame,
-    context_len: int = CONTEXT_LEN,
-    shard_tokens: int = SHARD_TOKENS,
-) -> DataFrame:
-    """``pack_chunks`` + ``shard_id``: which fixed-token-budget output
-    shard each document STARTS in (``start_tok div shard_tokens`` —
-    integer div, exact at any offset magnitude). A boundary-spanning
-    document belongs to its start shard, so per-shard token mass is
-    ``shard_tokens`` +/- one document length — the standard
-    start-assigned sharding contract."""
-    return pack_chunks(docs, context_len).withColumn(
-        "shard_id", F.expr(f"start_tok div {shard_tokens}")
-    )
-
-
-def shard_manifest(assign: DataFrame) -> DataFrame:
-    """Per-shard accounting over an assignment relation: doc count,
-    token mass, and the start-offset span — the table a training job
-    reads to schedule shard consumption."""
-    return assign.groupBy("shard_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tok").cast("long").alias("n_tokens"),
-        F.min("start_tok").cast("long").alias("first_tok"),
-        F.max(F.col("start_tok") + F.col("n_tok")).cast("long").alias(
-            "end_tok"
-        ),
-    )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    context_len: int = CONTEXT_LEN,
-    shard_tokens: int = SHARD_TOKENS,
-) -> None:
-    """Write the packed corpus as one parquet file per shard,
-    documents in stream order within each file.
-
-    Plan shape: ``repartition("shard_id")`` hash-routes every shard's
-    rows to one task (a shard is budget-bounded, so a partition is at
-    most a few shards — never corpus-sized), ``sortWithinPartitions``
-    orders by (shard, offset) so each written file is a contiguous,
-    ordered slice of the token stream, and ``partitionBy`` lays files
-    out as ``shard_id=N/`` directories a training loader can consume
-    shard-at-a-time. Readers resume mid-corpus by shard id without
-    touching earlier shards — the property a global-sort write (one
-    output task) and a random layout (no resumable order) both lack.
-    """
-    (
-        shard_assignments(docs, context_len, shard_tokens)
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "start_tok")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(path)
-    )

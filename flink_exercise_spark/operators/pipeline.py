@@ -388,8 +388,6 @@ def _mix_threshold_sql() -> str:
 
 @register(
     "pipeline_hash_split",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH b AS (
@@ -426,14 +424,7 @@ def q_hash_split(spark, sf_dir):
 
 @register(
     "pipeline_temperature_mix",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_pipeline.py temperature python reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # Rates are corpus-derived, so the oracle restates the whole
     # derivation: isqrt weights (exact — see
     # temperature_mix_thresholds), the 1-row (W, N) totals, the
@@ -491,12 +482,7 @@ def q_temperature_mix(spark, sf_dir):
 
 @register(
     "pipeline_llm_data_prep",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     oracle=_oracle(),
     doc="End-to-end LLM data prep: quality gate -> language gate -> "
         "exact dedup -> per-language token budget (one declarative plan)",
@@ -708,8 +694,6 @@ def _decontam_oracle(n: int = DECONTAM_N) -> str:
 
 @register(
     "pipeline_decontaminate",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_pipeline.py hand-computed leak/clean cases +
     # hashlib bucket pin.
     oracle=_decontam_oracle(),
@@ -886,12 +870,7 @@ def _decontam_fuzzy_oracle(threshold: float = 0.5) -> str:
 
 @register(
     "pipeline_decontaminate_fuzzy",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     oracle=_decontam_fuzzy_oracle(),
     doc="FUZZY benchmark decontamination (Dolma-style): train docs "
         "near-duplicating a held-out doc — MinHash-LSH candidates "

@@ -140,14 +140,7 @@ def source_quantile_profile(docs: DataFrame) -> DataFrame:
 
 @register(
     "doc_quantiles_by_source",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_profiling.py fixture-vs-reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=f"""
     WITH vals AS (
       SELECT source, 'n_chars' AS metric, CAST(n_chars AS BIGINT) AS v

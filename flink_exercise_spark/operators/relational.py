@@ -44,16 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 @register(
     "tpch_q1_pricing_summary",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2)                                AS sum_qty,
@@ -94,16 +85,7 @@ def q_tpch_q1(spark, sf_dir):
 
 @register(
     "tpch_q3_shipping_priority",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT l_orderkey,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -155,16 +137,7 @@ def q_tpch_q3(spark, sf_dir):
 
 @register(
     "tpch_q5_local_supplier_volume",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT n_name,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -213,16 +186,7 @@ def q_tpch_q5(spark, sf_dir):
 
 @register(
     "tpch_q6_forecast_revenue",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
            count(*) AS n_lines
@@ -257,16 +221,7 @@ def q_tpch_q6(spark, sf_dir):
 
 @register(
     "tpch_q14_promo_revenue",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT round(100.00 * sum(CASE WHEN p_type = 'PROMO'
                                    THEN l_extendedprice * (1 - l_discount)
@@ -309,16 +264,7 @@ def q_tpch_q14(spark, sf_dir):
 
 @register(
     "join_semi_anti_customers",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT 'with_orders' AS side, c_custkey, c_name FROM customer
     WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
@@ -344,8 +290,6 @@ def q_semi_anti(spark, sf_dir):
 
 @register(
     "join_outer_order_counts",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT c_custkey, count(o_orderkey) AS n_orders,
@@ -377,8 +321,6 @@ def q_outer(spark, sf_dir):
 
 @register(
     "cube_orders_status_priority",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
@@ -398,8 +340,6 @@ def q_cube(spark, sf_dir):
 
 @register(
     "grouping_sets_lineitem",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     # The four explicit sets are ROLLUP(l_returnflag, l_linestatus)
     # plus the (l_linestatus) slice — one entry covering both the
@@ -436,8 +376,6 @@ def q_grouping_sets(spark, sf_dir):
 
 @register(
     "sort_limit_top_orders",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT o_orderkey, round(o_totalprice, 2) AS totalprice, o_orderpriority
@@ -463,8 +401,6 @@ def q_sort_limit(spark, sf_dir):
 
 @register(
     "union_orders_and_purchases",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT 'order' AS src, o_orderkey AS id, round(o_totalprice, 2) AS amount
@@ -494,16 +430,7 @@ def q_union(spark, sf_dir):
 
 @register(
     "intersect_except_custkeys",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     SELECT 'both' AS side, c_custkey FROM (
       SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -540,8 +467,6 @@ def q_setops(spark, sf_dir):
 
 @register(
     "scalar_functions_showcase",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle="""
     SELECT o_orderkey,

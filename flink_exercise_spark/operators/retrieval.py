@@ -511,14 +511,7 @@ _HYBRID_ORACLE = f"""
 
 @register(
     "retrieval_hybrid_rrf",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_retrieval.py hybrid python reference
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_HYBRID_ORACLE,
     doc="Hybrid lexical+dense retrieval: BM25 top-20 and brute-force "
         "cosine top-20 over the same candidate universe, fused with "
@@ -537,14 +530,7 @@ def q_hybrid_rrf(spark, sf_dir):
 
 @register(
     "text_bm25_topk",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_retrieval.py BM25 python reference + fuzz
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_BM25_ORACLE,
     doc="Exact-integer BM25 top-k lexical retrieval: inverted-index "
         "postings + doc-frequency aggregates, query-side broadcast "

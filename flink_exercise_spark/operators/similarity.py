@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from flink_exercise_spark.caching import persist_tracked
 from flink_exercise_spark.functions.vectors import (
     cosine_from_norms,
-    l2_norm_expr,
     with_norm,
 )
 from flink_exercise_spark.registry import register
@@ -116,14 +115,6 @@ def _rank_top_k_exprs(
     out_cols.append((F.col("_i") + 1).cast("int").alias("rank"))
     pos = F.posexplode("_top").alias("_i", "_item")
     return pid, item, agg_p, agg_m, out_cols, pos
-
-
-def embedding_norms(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id",
-        "label",
-        F.round(l2_norm_expr("embedding"), 4).alias("l2_norm"),
-    )
 
 
 def knn_brute_force(
@@ -300,90 +291,6 @@ def knn_lsh_bucketed(
         F.round(
             cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"), 6
         ).alias("cosine"),
-    )
-    return _rank_top_k(scored, k)
-
-
-def knn_lsh_multiprobe(
-    emb: DataFrame,
-    n_queries: int = N_QUERIES,
-    k: int = 3,
-    probes: int = 3,
-    bits: int = 8,
-) -> DataFrame:
-    """Multi-probe LSH ANN: each query searches its own sign bucket
-    PLUS the ``probes - 1`` buckets reached by flipping its
-    least-confident sign bits (the dimensions with the smallest
-    |value| — the standard multi-probe sequence, Lv et al. VLDB'07).
-
-    Recall recovery without index growth: single-probe LSH misses a
-    true neighbor whenever one low-magnitude dimension straddles zero
-    between query and neighbor; probing the flip of exactly those
-    dimensions recovers most of that loss for ``probes`` x the probe
-    cost (still exponentially below brute force). Only the tiny query
-    relation fans out (probes x n_queries rows, still broadcast); the
-    corpus keeps one bucket per vector — at 100 TB the corpus-side
-    layout is untouched and the probe count is a pure query-time knob.
-
-    Candidate pairs reached via two different probes dedupe before
-    ranking (same score — distinct on the pair is exact)."""
-    withb = with_norm(emb.withColumn("bucket", sign_bucket_expr(bits=bits)))
-    # Ascending (|value|, dim) pairs: the first probes-1 entries are
-    # the least-confident dimensions. Bound column (_conf) before the
-    # slice/transform — same lambda-CSE rule as everywhere else.
-    conf = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    F.abs(F.col("embedding")[i]).alias("a"),
-                    F.lit(i).alias("i"),
-                )
-                for i in range(bits)
-            ]
-        )
-    )
-    queries = (
-        withb.filter(F.col("vec_id") < n_queries)
-        .withColumn("_conf", conf)
-        .withColumn(
-            "_probes",
-            F.concat(
-                F.array(F.col("bucket")),
-                F.transform(
-                    F.slice(F.col("_conf"), 1, probes - 1),
-                    # 2^i as pow (shiftleft needs a literal shift in
-                    # the Python API); bits <= 8 keeps this exact.
-                    lambda s: F.col("bucket").bitwiseXOR(
-                        F.pow(F.lit(2.0), s["i"]).cast("int")
-                    ),
-                ),
-            ),
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            F.explode("_probes").alias("bucket"),
-        )
-    )
-    corpus = spread(
-        withb.filter(F.col("vec_id") >= n_queries), "vec_id"
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-        "bucket",
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), "bucket")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"), 6
-            ).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     return _rank_top_k(scored, k)
 
@@ -1216,17 +1123,8 @@ _VEC_CTE = f"""
 """
 
 
-# NOTE: embedding_norms stays a library operator (and powers with_norm
-# in every pairwise join); its former standalone registry entry was
-# folded out to keep all oracle-checked queries inside the driver's
-# verification window — the kNN/near-dup oracles verify the same norm
-# math end to end.
-
-
 @register(
     "sim_knn_brute_force",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Numpy pin: tests/test_rotation_pins.py.
     oracle=_VEC_CTE + f""",
     scored AS (
@@ -1257,8 +1155,6 @@ def _bucket_sql(alias: str) -> str:
 
 @register(
     "sim_knn_lsh_bucketed",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Numpy pin: tests/test_rotation_pins.py.
     oracle=f"""
     WITH b AS (
@@ -1299,12 +1195,7 @@ def q_knn_lsh(spark, sf_dir):
 
 @register(
     "sim_knn_ivf",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
     oracle=f"""
     WITH u AS (
       SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -1371,14 +1262,7 @@ def q_knn_ivf(spark, sf_dir):
 
 @register(
     "sim_embedding_near_dup_pairs",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # Threshold 0.35 sits inside the fixture corpus's in-bucket cosine
     # tail (max ~0.43), so the query returns a small non-empty pair set
     # (random embeddings carry no true semantic dups).
@@ -1419,14 +1303,7 @@ def q_near_dup(spark, sf_dir):
 
 @register(
     "dedup_semantic_prune",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=f"""
     WITH u AS (
       SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -1485,16 +1362,7 @@ def q_semantic_prune(spark, sf_dir):
 
 @register(
     "sim_label_centroid_norms",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     WITH unnested AS (
       SELECT label, CAST(unnest(embedding) AS DOUBLE) AS x,

@@ -173,8 +173,6 @@ def heavy_hitters(
 
 @register(
     "events_heavy_hitters",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_sketches.py pandas fixture reference.
     oracle=f"""
     WITH tot AS (SELECT count(*) AS total FROM events

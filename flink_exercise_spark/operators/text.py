@@ -120,28 +120,6 @@ def text_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_scores(docs: DataFrame) -> DataFrame:
-    """Heuristic document-quality features: length, stopword ratio,
-    punctuation ratio, lexical diversity. The standard pre-training
-    corpus filters (C4/Gopher-style) are thresholds over exactly these
-    columns."""
-    toks = tokens_expr()
-    n_tokens = F.size(toks)
-    n_stop = _marker_score(toks, STOPWORDS)
-    n_punct = F.length("text") - F.length(
-        F.regexp_replace("text", r"[^\w\s]", "")
-    )
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        F.round(n_stop / n_tokens, 4).alias("stopword_ratio"),
-        F.round(n_punct / F.length("text"), 4).alias("punct_ratio"),
-        F.round(F.size(F.array_distinct(toks)) / n_tokens, 4).alias(
-            "lexical_diversity"
-        ),
-    )
-
-
 def language_id(docs: DataFrame) -> DataFrame:
     """Keyword-marker language ID: score each candidate language by
     marker-token hits, predict the argmax (tie -> LANG_MARKERS order)."""
@@ -294,16 +272,6 @@ def scrub_pii(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def bpe_token_counts(docs: DataFrame) -> DataFrame:
-    """Token counting with a BPE-style pre-tokenizer regex (word pieces
-    + punctuation marks) — the unit LLM data pipelines budget by."""
-    toks = F.regexp_extract_all("text", F.lit(BPE_TOKEN_PATTERN), 0)
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_bpe_tokens"),
-    )
-
-
 _ORACLE_TOKS = "regexp_split_to_array(trim(text), '\\s+')"
 
 # SQL twin of the non-blank-lines array (DuckDB list HOFs). The bigram
@@ -420,14 +388,7 @@ def classifier_scores_joined(docs: DataFrame, weights: DataFrame) -> DataFrame:
 
 @register(
     "text_stats",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # Token statistics AND C4/Gopher-style quality features in one
     # per-document pass — the columns every pre-training corpus filter
     # thresholds over. Round 6 adds the Gopher repetition features
@@ -569,14 +530,7 @@ def _lang_id_oracle() -> str:
 
 @register(
     "text_language_id",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     # Absorbed the former text_lang_profile entry in r6 (registry
     # capacity: consolidating near-duplicate showcases keeps every
     # oracled entry inside the rotation's 2-round freshness bound —
@@ -687,14 +641,7 @@ def chunk_documents(
 
 @register(
     "text_chunk_overlap",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_chunking.py python reference + hand cases
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
@@ -726,8 +673,6 @@ def q_chunk_overlap(spark, sf_dir):
 
 @register(
     "text_fingerprints",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Hashlib pin: tests/test_rotation_pins.py.
     # Fingerprints + BPE-ish token budget + PII scrub accounting in one
     # per-document pass (round 6 consolidates the PII scrubber here:
@@ -949,8 +894,6 @@ _HTML_ORACLE = """
 
 @register(
     "text_html_extract",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_html.py fixture round-trip vs a pure-python
     # extractor.
     oracle=_HTML_ORACLE,

@@ -395,16 +395,7 @@ def _oracle(pattern: list[float], k: int = TOP_K, L: int = PATTERN_LEN) -> str:
 
 @register(
     "ts_pattern_search",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r6 (demoted in r5, driver-green r4): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=_oracle(RAMP),
     doc="Time-series pattern similarity: top-20 per-user subsequences "
         "by z-normalized correlation with an upward-ramp query pattern "

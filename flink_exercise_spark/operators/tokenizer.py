@@ -162,14 +162,7 @@ def bpe_train(
 
 @register(
     "text_vocab_topk",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, tok FROM (
@@ -303,14 +296,7 @@ def token_rarity(docs: DataFrame) -> DataFrame:
 
 @register(
     "text_token_rarity",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     WITH toks AS (
       SELECT doc_id, tok FROM (
@@ -335,94 +321,6 @@ def token_rarity(docs: DataFrame) -> DataFrame:
 )
 def q_token_rarity(spark, sf_dir):
     return token_rarity(load_table(prep(spark), sf_dir, "documents"))
-
-
-def bpe_apply_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Segment ONE word with a trained merge table: apply each merge in
-    training order, replacing every adjacent (left, right) occurrence —
-    exactly the replacement step ``bpe_train`` itself performs, so
-    encode(train_corpus) reproduces the trainer's final symbol table
-    (pinned in test_tokenizer.py). Pure function so the Arrow kernel
-    and the test reference share one definition."""
-    syms: list[str] = list(word)
-    for a, b in merges:
-        if len(syms) < 2:
-            break
-        out: list[str] = []
-        i = 0
-        n = len(syms)
-        while i < n:
-            if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-) -> DataFrame:
-    """(doc_id, pieces array<string>, n_pieces) — distributed BPE
-    segmentation of the corpus under a trained merge table: the APPLY
-    side of ``bpe_train``, i.e. what a training pipeline runs over
-    100 TB after fitting the tokenizer on a sample.
-
-    Scale shape: the merge table is model state (n_merges rows), so it
-    ships to executors inside the kernel closure — the corpus never
-    shuffles at all (mapInPandas is a narrow map over the scan). The
-    kernel memoizes word -> pieces per Arrow batch task: corpus token
-    frequencies are Zipfian, so the merge loop runs once per DISTINCT
-    word seen by the task, not once per occurrence — the same
-    model-state/corpus-pass split as bpe_train, inverted.
-
-    Iterative per-word merging is not expressible as a fixed SQL
-    statement, so this is a library operator in the ``bpe_train`` /
-    ``kmeans_centroids`` check class: no registry slot; pinned against
-    a pure-python reference and the trainer's own symbol table in
-    test_tokenizer.py. Blank/NULL documents yield an empty pieces
-    array (consistent with _corpus_tokens' blank-token filter).
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-    import pyarrow  # noqa: F401  (mapInPandas requires Arrow)
-
-    pairs = [(m[0], m[1]) for m in merges]
-    out_schema = (
-        "doc_id long, pieces array<string>, n_pieces long"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, list[str]] = {}
-
-        def enc(text) -> list[str]:
-            if text is None or not isinstance(text, str):
-                return []
-            pieces: list[str] = []
-            for w in text.split():
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = bpe_apply_word(w, pairs)
-                pieces.extend(got)
-            return pieces
-
-        for pdf in batches:
-            enc_col = pdf["text"].map(enc)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "pieces": enc_col,
-                    "n_pieces": enc_col.map(len),
-                }
-            )
-
-    return spread(docs.select("doc_id", "text"), "doc_id").mapInPandas(
-        kernel, schema=out_schema
-    )
 
 
 # --- adjacent-token collocations (bigram lift / PMI family) ---
@@ -537,8 +435,6 @@ def bigram_lift(
 
 @register(
     "text_bigram_lift",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pin: tests/test_tokenizer.py fixture Counter-reference
     # equality.
     oracle=f"""

@@ -73,7 +73,6 @@ from flink_exercise_spark.registry import register
 from flink_exercise_spark.sources.tables import spread
 
 FP_FRAMES = 4  # consecutive sampled-frame hashes per landmark run
-FRAME_PHASH_SCHEMA = "doc_id long, frame_idx int, phash long"
 VFP_SCHEMA = "doc_id long, start_run int, fp string"
 
 
@@ -97,40 +96,6 @@ def frame_phashes_of(payload: bytes, stride: int = FRAME_STRIDE) -> list[int]:
             )
         out.append(phash64(luma_plane_any(frames[i])))
     return out
-
-
-def video_frame_phash(
-    with_payload: DataFrame, stride: int = FRAME_STRIDE
-) -> DataFrame:
-    """(doc_id, frame_idx, phash) feature relation — one Arrow batch
-    pass; the video bytes never survive into the output (the
-    image_phash / audio_spectral_fingerprint shape). frame_idx is the
-    index within the SAMPLED sequence (i-th decoded frame)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for i, h in enumerate(
-                    frame_phashes_of(bytes(payload), stride)
-                ):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    src = (
-        with_payload
-        if with_payload.isStreaming
-        else spread(with_payload, "doc_id")
-    )
-    return src.mapInPandas(run, schema=FRAME_PHASH_SCHEMA)
 
 
 def video_landmarks(

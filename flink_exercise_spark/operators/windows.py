@@ -57,16 +57,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 @register(
     "t4_sliding_window_counts",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     # A sliding (7d, 1d) window holds ts iff start = floor(ts/1d)*1d - k*1d
     # for k in 0..6 — enumerate memberships with generate_series.
     oracle="""
@@ -117,8 +108,6 @@ SESSION_WINDOWS_ORACLE = """
 
 @register(
     "t4_session_windows",
-    # Promoted back for r14 (demoted in r13, driver-green r12):
-    # the rotation contract requires a driver pass within two rounds.
     # Pandas pin: tests/test_rotation_pins.py.
     oracle=SESSION_WINDOWS_ORACLE,
     doc="Per-user session windows, 30-minute gap",
@@ -166,16 +155,7 @@ def hypertable_rollup(events: DataFrame, value: str = "value") -> DataFrame:
 
 @register(
     "hypertable_rollup_events",
-    # priority=1 (r14 rotation): driver-green in r13; takes a rotation
-    # slot so the 40 r13-demoted entries (freshest pass r12) return to
-    # the driver window. Hash-verified locally every round by
-    # test_parity_demoted.
     # Pin: tests/test_rotation_pins.py
-    priority=1,
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
-    # Promoted back for r7 (demoted in r6, driver-green r5): the
-    # rotation contract requires a driver pass within two rounds.
     oracle="""
     WITH b AS (
       SELECT CAST(floor(epoch(date_trunc('day', ts))) AS BIGINT)

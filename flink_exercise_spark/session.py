@@ -21,6 +21,16 @@ import weakref
 
 from pyspark.sql import SparkSession
 
+
+def local_cores() -> int:
+    """Core count for local mode: ``$SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on. The one reader of that variable
+    — bench.py and scripts/ take the value from here."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+
+
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -36,7 +46,7 @@ DEFAULT_CONF: dict[str, str] = {
     # in tiny-task scheduling at fixture scale. AQE coalesces runtime
     # excess either way.
     "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "SPARK_GRAFT_SHUFFLE", str(local_cores())
     ),
     "spark.sql.files.maxPartitionBytes": "128m",
     # Broadcast threshold: dim tables (region/nation/customer/part/
@@ -111,14 +121,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is supplied, mirroring the reference's
-    ``--cores`` parameter (StreamingJob.scala:74).
+    ``master`` defaults to ``local[local_cores()]`` when no cluster
+    master is supplied, mirroring the reference's ``--cores`` parameter
+    (StreamingJob.scala:74).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cores()}]"
     builder = builder.master(master)
     merged = dict(DEFAULT_CONF)
     if conf:

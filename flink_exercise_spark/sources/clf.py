@@ -26,6 +26,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_exercise_spark.functions.exprmemo import expr_memo
+
 # Common Log Format with explicit zone offset; group numbers:
 #  1 host, 2 day, 3 month, 4 year, 5 hour, 6 minute, 7 second,
 #  8 tz offset, 9 method, 10 resource, 11 http version, 12 status,
@@ -88,55 +90,34 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
     # the expression flagged non-deterministic (the barrier) while the
     # generated code stays byte-identical across builds — codegen
     # cache hit.
-    split_df = raw.withColumn("_m", _memo_m(column)).withColumn(
-        "_p", _memo_p()
-    )
-    return split_df.select(*_memo_parse_columns(column))
-
-
-# Expression memo (r13 optimization): PySpark Column objects are
-# immutable expression trees, so the parse projection — ~15 columns
-# whose nested builders each cross py4j and carry the 200-char pattern
-# literal — is built ONCE per (input column name) and reused by every
-# subsequent parse_clf call. Measured: ~0.2 s of driver-side py4j
-# construction per call at build time, paid once instead of once per
-# bench pass / registry invocation (the load_table DataFrame-cache
-# precedent, sources/tables.py). Safe across SparkSessions in one
-# process: unresolved Columns are session-agnostic.
-_MEMO_M: dict[str, Column] = {}
-_MEMO_COLS: dict[str, list[Column]] = {}
-_MEMO_P: list[Column] = []
-
-
-def _memo_m(column: str) -> Column:
-    col = _MEMO_M.get(column)
-    if col is None:
-        col = _MEMO_M[column] = F.regexp_replace(
-            F.col(column), CLF_PATTERN, _REPLACEMENT
-        )
-    return col
-
-
-def _memo_p() -> Column:
-    if not _MEMO_P:
-        _MEMO_P.append(
-            F.split(
+    # The three expression trees are memoized per input column name
+    # (functions/exprmemo.py): ~0.2 s of py4j construction per call,
+    # paid once per process instead of once per parse.
+    split_df = raw.withColumn(
+        "_m",
+        expr_memo(
+            ("parse_clf._m", column),
+            lambda: F.regexp_replace(F.col(column), CLF_PATTERN, _REPLACEMENT),
+        ),
+    ).withColumn(
+        "_p",
+        expr_memo(
+            "parse_clf._p",
+            lambda: F.split(
                 F.col("_m"),
                 F.lit(_FS),
                 F.lit(-1) + (F.rand(seed=0) * F.lit(0.0)).cast("int"),
-            )
+            ),
+        ),
+    )
+    return split_df.select(
+        *expr_memo(
+            ("parse_clf.columns", column), lambda: _parse_columns(column)
         )
-    return _MEMO_P[0]
+    )
 
 
-def _memo_parse_columns(column: str) -> list[Column]:
-    cols = _MEMO_COLS.get(column)
-    if cols is None:
-        cols = _MEMO_COLS[column] = _build_parse_columns(column)
-    return cols
-
-
-def _build_parse_columns(column: str) -> list[Column]:
+def _parse_columns(column: str) -> list[Column]:
     # Guard: sentinel present (pattern matched), exactly 14 fields (a
     # matching line whose captured text itself contained \x01 would
     # split into >14 fields and silently shift every column), and the
@@ -208,11 +189,6 @@ def invalid_lines(parsed: DataFrame) -> DataFrame:
     ).select("raw")
 
 
-def read_clf(spark, path: str) -> DataFrame:
-    """S1 — text source -> parsed, valid records only."""
-    return valid_lines(parse_clf(spark.read.text(path)))
-
-
 def events_as_clf_lines(events: DataFrame) -> DataFrame:
     """Render the events fixture as CLF text lines (test vehicle: the
     fixtures ship no raw log file, so we manufacture one; the driver's
@@ -248,11 +224,7 @@ def _register_roundtrip() -> None:
 
     @register(
         "clf_parse_roundtrip",
-        # Promoted back for r14 (demoted in r13, driver-green r12):
-        # the rotation contract requires a driver pass within two rounds.
         # Pin: tests/test_clf.py golden-log hand-computed reference.
-    # Promoted back for r11 (demoted in r10, driver-green r9): the
-    # rotation contract requires a driver pass within two rounds.
         # Oracle computes straight on events: host = 'user'||user_id,
         # bytes = floor(value); windows truncate ts to whole seconds
         # (CLF carries second precision), which cannot move an event
@@ -281,8 +253,6 @@ def _register_roundtrip() -> None:
 
     @register(
         "clf_golden_log",
-        # Promoted back for r14 (demoted in r13, driver-green r12):
-        # the rotation contract requires a driver pass within two rounds.
         # Pin: tests/test_clf.py golden-log hand-computed reference.
         # VALUES oracle: expected outputs hand-computed from the
         # immutable checked-in log (see GOLDEN_LOG_PATH comment) — this

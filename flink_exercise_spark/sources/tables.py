@@ -137,13 +137,3 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     memo[cols] = out
     df._spread_memo = memo  # noqa: SLF001 — plain attr on the py object
     return out
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

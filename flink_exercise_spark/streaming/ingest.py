@@ -166,131 +166,6 @@ def resolve_canonical(emissions: DataFrame) -> DataFrame:
     )
 
 
-def stream_decontaminate(
-    docs: DataFrame,
-    eval_grams: DataFrame,
-    store_path: str | None = None,
-    n: int | None = None,
-    timeout_sec: int = 120,
-) -> str:
-    """Streaming ingest decontamination: every arriving micro-batch of
-    documents is checked against a STATIC held-out n-gram set and the
-    flagged documents appended to an executor-side parquet store.
-    Returns the store path (read it back for the flagged relation).
-
-    This is the production placement of ``pipeline.decontaminate``:
-    the benchmark n-gram set is fixed (it does not grow with the
-    corpus), so it sits on the static side of a per-micro-batch
-    broadcast join — the same stream-static enrichment shape as the
-    dimension join (streaming/jobs.py), stateless, no watermark. The
-    per-document hit aggregation needs a groupBy after the n-gram
-    explode, which streaming aggregation semantics would force into
-    the state store; ``foreachBatch`` runs the exact BATCH operator
-    (``decontaminate_against``) per micro-batch instead — correct
-    because every document's n-grams arrive in the same input row, so
-    no aggregation state ever spans micro-batches.
-
-    Parity contract (pinned in tests/test_streaming_ingest.py): the
-    union of per-batch outputs equals the batch operator over the
-    union of the batches, for ANY micro-batch partitioning of the
-    input.
-    """
-    from flink_exercise_spark.operators.pipeline import (
-        DECONTAM_N,
-        decontaminate_against,
-    )
-    from flink_exercise_spark.streaming.jobs import tracked_tempdir
-
-    n = DECONTAM_N if n is None else n
-    path = store_path or tracked_tempdir("stream_decontam_")
-
-    def check_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decontaminate_against(batch_df, eval_grams, n=n).write.mode(
-            "append"
-        ).parquet(path)
-
-    q = (
-        docs.writeStream.foreachBatch(check_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # try/finally, not sequential stop: awaitTermination re-raises a
-    # failed batch's StreamingQueryException, and skipping stop() then
-    # leaks the query's state store + listener threads (ADVICE r6).
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"stream_decontaminate did not drain within {timeout_sec}s; "
-            f"PARTIAL store at {path} — rerun with a fresh store_path "
-            f"(per-batch appends are not checkpointed, so a retry into "
-            f"the same path would duplicate rows)"
-        )
-    return path
-
-
-def stream_decontaminate_images(
-    images: DataFrame,
-    benchmark_hashes: DataFrame,
-    store_path: str | None = None,
-    max_distance: int | None = None,
-    timeout_sec: int = 120,
-) -> str:
-    """Streaming ingest decontamination for the IMAGE modality (r13 —
-    the vision twin of ``stream_decontaminate``): every arriving
-    micro-batch of (doc_id, payload) images is pHashed through the
-    real decoders and checked against a STATIC benchmark hash set
-    (``image_phash`` output — fixed size by production contract);
-    flagged (doc_id, bench_id, hamming) rows append to an
-    executor-side parquet store. Returns the store path.
-
-    Same placement argument as the text pass: the benchmark side does
-    not grow with the stream, so it sits on the static side of a
-    per-micro-batch broadcast band join — stateless, no watermark,
-    and ``foreachBatch`` runs the exact BATCH operator
-    (``decontaminate_images``) because each image's verdict depends
-    only on its own bytes plus the static set, so no state ever spans
-    micro-batches. Parity contract (tests/test_streaming_ingest.py):
-    union of per-batch outputs == the batch operator over the union,
-    for ANY micro-batch partitioning.
-    """
-    from flink_exercise_spark.operators.image_dedup import (
-        N_BANDS,
-        decontaminate_images,
-        image_phash,
-    )
-    from flink_exercise_spark.streaming.jobs import tracked_tempdir
-
-    dist = N_BANDS - 1 if max_distance is None else max_distance
-    path = store_path or tracked_tempdir("stream_img_decontam_")
-
-    def check_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decontaminate_images(
-            image_phash(batch_df), benchmark_hashes, max_distance=dist
-        ).write.mode("append").parquet(path)
-
-    q = (
-        images.writeStream.foreachBatch(check_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"stream_decontaminate_images did not drain within "
-            f"{timeout_sec}s; PARTIAL store at {path} — rerun with a "
-            f"fresh store_path (per-batch appends are not "
-            f"checkpointed, so a retry into the same path would "
-            f"duplicate rows)"
-        )
-    return path
-
-
 def ingest_data_prep(
     docs: DataFrame,
     eval_grams: DataFrame,
@@ -787,286 +662,3 @@ def warm_start_ingest_dedup(
         spark.table(f"{name_prefix}_hash"),
         spark.table(f"{name_prefix}_bands"),
     )
-
-
-# --- multimodal streaming ingest (r11) -------------------------------------
-#
-# The dedup matrix's streaming placement for the binary modalities:
-# the feature kernels (perceptual hash, spectral fingerprints, byte
-# md5) are STATELESS per document, so the streaming job's only duty is
-# continuous extraction — each micro-batch routes payloads JVM-side
-# (mm_dedup.modality_expr) and APPENDS the compact feature relations
-# to per-modality parquet logs; the PAIRING is a read-side reduce over
-# the accumulated logs (the ForeachBatchTopHost deployment shape:
-# append change log + read-side resolution). Verdicts are therefore
-# arrival-order independent by construction, and a replayed batch only
-# duplicates log rows, which the read-side distinct folds away —
-# replay-idempotent without a state store, because no cross-batch
-# state exists to corrupt.
-
-
-def ingest_multimodal_features(
-    with_payload: DataFrame,
-    store_path: str,
-    timeout_sec: int | None = None,
-    video_stride: int | None = None,
-) -> str:
-    """One streaming job: route each micro-batch by container sniff
-    and append (doc_id, phash) / (doc_id, start_window, fp) /
-    (doc_id, start_run, fp) / (doc_id, byte_hash) to the per-modality
-    logs under ``store_path``. The payload bytes never land — only the
-    compact features a later dedup pass needs (at 100 TB this is the
-    whole point: the log is orders smaller than the corpus).
-    ``video_stride`` is an EXTRACTION-time choice (the landmark kernel
-    samples frames as it decodes), so it lives here, not on the
-    read-side resolve."""
-    from flink_exercise_spark.operators.audio import (
-        audio_spectral_fingerprint,
-    )
-    from flink_exercise_spark.operators.image_dedup import image_phash
-    from flink_exercise_spark.operators.mm_dedup import modality_expr
-    from flink_exercise_spark.operators.video_dedup import video_landmarks
-
-    if timeout_sec is None:
-        timeout_sec = int(
-            os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "120")
-        )
-
-    def land(batch: DataFrame, batch_id: int) -> None:
-        routed = batch.select(
-            "doc_id", "payload", modality_expr().alias("modality")
-        ).localCheckpoint()  # route once per batch, not per consumer
-        image_phash(routed.filter(F.col("modality") == "image")).write.mode(
-            "append"
-        ).parquet(os.path.join(store_path, "image_hashes"))
-        audio_spectral_fingerprint(
-            routed.filter(F.col("modality") == "audio")
-        ).write.mode("append").parquet(
-            os.path.join(store_path, "audio_fps")
-        )
-        vid_kwargs = {} if video_stride is None else {"stride": video_stride}
-        video_landmarks(
-            routed.filter(F.col("modality") == "video"), **vid_kwargs
-        ).write.mode("append").parquet(
-            os.path.join(store_path, "video_fps")
-        )
-        # the exact-byte floor's feature (see multimodal_dup_pairs):
-        # byte-identical clips too short for min_shared landmark runs
-        routed.filter(
-            F.col("modality").isin("audio", "video")
-        ).select(
-            "doc_id", "modality", F.md5("payload").alias("byte_hash")
-        ).write.mode("append").parquet(
-            os.path.join(store_path, "av_hashes")
-        )
-        routed.filter(F.col("modality") == "other").select(
-            "doc_id", F.md5("payload").alias("byte_hash")
-        ).write.mode("append").parquet(
-            os.path.join(store_path, "other_hashes")
-        )
-
-    q = (
-        with_payload.writeStream.foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:  # the stream_decontaminate stop/await discipline
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"ingest_multimodal_features did not drain within "
-            f"{timeout_sec}s; PARTIAL logs at {store_path}"
-        )
-    return store_path
-
-
-def resolve_multimodal_pairs(
-    spark: SparkSession, store_path: str, **pair_kwargs
-) -> DataFrame:
-    """The read-side reduce: (doc_a, doc_b, modality, evidence) over
-    everything the feature logs have accumulated — the exact
-    ``multimodal_dup_pairs`` output contract (pinned stream == batch
-    in tests). ``distinct()`` on each log folds replayed batches
-    away."""
-    from flink_exercise_spark.operators.audio import audio_neardup_pairs
-    from flink_exercise_spark.operators.image_dedup import (
-        image_phash_pairs,
-    )
-    from flink_exercise_spark.operators.video_dedup import (
-        video_neardup_pairs,
-    )
-
-    unknown = [
-        k for k in pair_kwargs
-        if not k.startswith(("image_", "audio_", "video_"))
-    ]
-    if unknown:
-        # a mis-keyed threshold must fail, not silently fall back to
-        # the defaults (code-review r11) — the batch twin raises
-        # TypeError on unknown kwargs, this is its read-side mirror
-        raise TypeError(
-            f"unknown pair_kwargs {unknown}: prefix image-pipeline "
-            "options with image_, audio-pipeline options with audio_, "
-            "and video-pipeline options with video_ (e.g. "
-            "image_max_distance, audio_min_shared, video_min_shared)"
-        )
-
-    def _log(name: str, schema: str) -> DataFrame:
-        # an ingest stream that drained zero batches never created the
-        # log directories; the resolve contract is the EMPTY relation,
-        # not a path error (code-review r11)
-        p = os.path.join(store_path, name)
-        if not os.path.exists(p):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(p).distinct()
-
-    image_pairs = image_phash_pairs(
-        _log("image_hashes", "doc_id long, phash long"),
-        **{
-            k.removeprefix("image_"): v
-            for k, v in pair_kwargs.items()
-            if k.startswith("image_")
-        },
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.lit("image").alias("modality"),
-        F.col("hamming").cast("long").alias("evidence"),
-    )
-    audio_pairs = audio_neardup_pairs(
-        _log("audio_fps", "doc_id long, start_window int, fp string"),
-        **{
-            k.removeprefix("audio_"): v
-            for k, v in pair_kwargs.items()
-            if k.startswith("audio_")
-        },
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.lit("audio").alias("modality"),
-        F.col("n_shared").cast("long").alias("evidence"),
-    )
-    video_pairs = video_neardup_pairs(
-        _log("video_fps", "doc_id long, start_run int, fp string"),
-        **{
-            k.removeprefix("video_"): v
-            for k, v in pair_kwargs.items()
-            if k.startswith("video_")
-        },
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.lit("video").alias("modality"),
-        F.col("n_shared").cast("long").alias("evidence"),
-    )
-    landmark_pairs = audio_pairs.unionByName(video_pairs)
-    # the exact-byte floor, mirrored from multimodal_dup_pairs: pairs
-    # the landmark channels already proved drop out via the anti-join
-    av = _log("av_hashes", "doc_id long, modality string, byte_hash string")
-    av_canon = av.groupBy("byte_hash", "modality").agg(
-        F.min("doc_id").alias("doc_a")
-    )
-    av_floor = (
-        av.join(av_canon, ["byte_hash", "modality"])
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select(
-            "doc_a",
-            F.col("doc_id").alias("doc_b"),
-            "modality",
-            F.lit(0).cast("long").alias("evidence"),
-        )
-        .join(
-            landmark_pairs.select("doc_a", "doc_b"),
-            ["doc_a", "doc_b"],
-            "left_anti",
-        )
-    )
-    other = _log("other_hashes", "doc_id long, byte_hash string")
-    canon = other.groupBy("byte_hash").agg(F.min("doc_id").alias("doc_a"))
-    other_pairs = (
-        other.join(canon, "byte_hash")
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select(
-            "doc_a",
-            F.col("doc_id").alias("doc_b"),
-            F.lit("other").alias("modality"),
-            F.lit(0).cast("long").alias("evidence"),
-        )
-    )
-    return (
-        image_pairs.unionByName(landmark_pairs)
-        .unionByName(av_floor)
-        .unionByName(other_pairs)
-    )
-
-
-# --- streaming embedding ingest into the persisted ANN store (r12) ---------
-#
-# The text-dedup archive has a full streaming story (exact, near-dup,
-# warm-start); this closes the symmetry for the vector store. Each
-# micro-batch of (vec_id, embedding) assigns + residual-encodes
-# against the live index version's PINNED models (centroids + PQ
-# books are never retrained by ingest — recluster = --rebuild) and
-# lands through append_ann_index's partition-scoped versioned merge:
-# only the cell directories the batch touches rewrite, every other
-# partition carries forward by manifest reference, and a reader
-# mid-stream keeps its snapshot (meta.json republishes last). A
-# replayed micro-batch re-derives the same assignments from the same
-# pinned models, so it is an idempotent merge-on-key update; a vector
-# whose embedding moved cells fails the batch loud (the append
-# contract). Stream-after-N-batches ≡ one-shot append of the union is
-# pinned in tests — the warm-start parity shape applied to vectors.
-
-
-def ingest_embeddings_stream(
-    stream_emb: DataFrame,
-    index_root: str,
-    timeout_sec: int | None = None,
-) -> str:
-    """Run a bounded (vec_id, embedding) stream into the live ANN
-    index version under ``index_root`` (bootstrap day 1 via
-    ann_prep first — streaming into a store that does not exist yet
-    is a deployment-order error and fails loud on the missing
-    meta.json)."""
-    from flink_exercise_spark.operators.ann_store import (
-        ann_root_path,
-        append_ann_index,
-        read_ann_meta,
-    )
-
-    live = ann_root_path(index_root)
-    read_ann_meta(live)  # fail before starting the stream, not inside it
-
-    if timeout_sec is None:
-        timeout_sec = int(
-            os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "120")
-        )
-
-    def land(batch: DataFrame, batch_id: int) -> None:
-        # an empty trigger would still bump four sub-store versions;
-        # skip it (availableNow's final empty batch is routine)
-        if batch.isEmpty():
-            return
-        append_ann_index(
-            batch.sparkSession, live, batch,
-            assign_kernel=True, encode_kernel=True,
-        )
-
-    q = (
-        stream_emb.writeStream.foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:  # the ingest_multimodal_features stop/await discipline
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"ingest_embeddings_stream did not drain within "
-            f"{timeout_sec}s; the store holds the batches that "
-            f"committed (each micro-batch is one atomic merge)"
-        )
-    return live

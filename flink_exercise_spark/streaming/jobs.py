@@ -116,12 +116,6 @@ def windowed_floor_avg_stream(
     )
 
 
-def streaming_distinct_hosts(events: DataFrame) -> DataFrame:
-    """A3 streaming: stateful first-record-per-host via the keyed state
-    store (exactly the reference's filterWithState semantics)."""
-    return events.dropDuplicates(["user_id"])
-
-
 def windowed_first_per_host_stream(
     events: DataFrame, watermark: str = "0 seconds"
 ) -> DataFrame:
@@ -141,12 +135,6 @@ def windowed_first_per_host_stream(
         .select(F.window("ts", WINDOW_31D).alias("w"), "user_id")
         .dropDuplicates(["w", "user_id"])
     )
-
-
-def running_host_counts(events: DataFrame) -> DataFrame:
-    """A1 streaming with Flink's continuous-emission semantics:
-    update-mode re-emits each host's new running count per batch."""
-    return events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_requests"))
 
 
 def session_windows_stream(
@@ -182,127 +170,6 @@ def session_windows_stream(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def stateful_first_seen(events: DataFrame, timeout_ms: int | None = None) -> DataFrame:
-    """A3/T5 as a *custom* stateful operator: per-key boolean state,
-    emit only the first record seen per user — a faithful port of the
-    reference's ``filterWithState[Set[String]]``
-    (StreamingJob.scala:157-165), expressed with
-    ``applyInPandasWithState`` (Arrow-batched keyed state).
-
-    ``dropDuplicates`` is the built-in that subsumes this; the custom
-    form is the documented escape hatch for stateful logic the
-    built-ins can't express (counters with TTL, CEP-ish transitions).
-    State size: one boolean per key — identical to the reference's
-    degenerate <=1-element Set per key (SURVEY.md §2.3 A3 note).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            # key already emitted once; consume and emit nothing
-            for _ in pdfs:
-                pass
-            return
-        first = None
-        for pdf in pdfs:
-            if len(pdf) and first is None:
-                first = pdf.nsmallest(1, "event_id")
-        state.update((True,))
-        if first is not None:
-            yield first[["user_id", "event_id", "ts", "event_type"]]
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType="user_id long, event_id long, ts timestamp, "
-                         "event_type string",
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_first_seen_tws(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """A3/T5 on Spark 4's ``transformWithStateInPandas`` — the current
-    arbitrary-stateful-processing API (successor to
-    ``applyInPandasWithState``): explicit per-key value state with
-    optional TTL, the bounded-state form of the reference's
-    ``filterWithState`` Set (StreamingJob.scala:157-165) that survives
-    key churn at 100 TB/day. Requires the RocksDB state store provider
-    (session conf ``spark.sql.streaming.stateStore.providerClass``) —
-    which is also the production state backend SCALE.md prescribes.
-
-    Semantics match ``stateful_first_seen``: emit only the first
-    (min event_id) record per user; with ``ttl_ms`` the "seen" marker
-    expires and a recurring key is re-emitted — same contract as
-    ``dropDuplicatesWithinWatermark`` but with explicit state.
-
-    Status: GUARDED SEAM (the multimodal-codec pattern, decided r8
-    closing VERDICT r7 ask #6). The canonical T5 form of the
-    reference's ``filterWithState`` is ``stateful_first_seen`` (the
-    ``applyInPandasWithState`` port), which executes and parity-tests
-    in every environment. This variant exists because
-    transformWithState is the API Spark 4 steers new arbitrary-state
-    code toward (TTL, timers, multiple state variables); its Python
-    worker needs the ``protobuf`` package (its state-server wire
-    protocol), which this container does not ship and installs are
-    off-limits. The guard below fails FAST and loudly at call time
-    instead of deep inside a started streaming query;
-    tests/test_streaming.py executes the guard branch here and the
-    full query branch wherever protobuf exists — no skipped tests
-    either way.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(its state-server protocol); this environment ships none. "
-            "Use stateful_first_seen (the applyInPandasWithState port) "
-            "— the executed, parity-tested form of the same semantics."
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "seen boolean", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            first = None
-            for pdf in rows:
-                if len(pdf) and not self._seen.exists():
-                    cand = pdf.nsmallest(1, "event_id")
-                    if first is None or (
-                        cand["event_id"].iloc[0] < first["event_id"].iloc[0]
-                    ):
-                        first = cand
-            if self._seen.exists():
-                return iter([])
-            self._seen.update((True,))
-            if first is None:
-                return iter([])
-            return iter(
-                [first[["user_id", "event_id", "ts", "event_type"]]]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=FirstSeen(),
-        outputStructType="user_id long, event_id long, ts timestamp, "
-                         "event_type string",
-        outputMode="append",
-        timeMode="processingTime" if ttl_ms is not None else "none",
     )
 
 
@@ -365,30 +232,6 @@ def tracked_tempdir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     _TRACKED_DIRS.append(d)
     return d
-
-
-def run_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    mode: str = "append",
-    timeout_sec: int = 120,
-) -> None:
-    """Execute a bounded stream into a parquet file sink with a
-    checkpoint — the production deployment shape. The checkpoint's
-    offset log + the file sink's transaction log give end-to-end
-    exactly-once: re-running with the same checkpoint after completion
-    (or a crash) writes nothing twice."""
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    q.stop()
 
 
 class ForeachBatchTopHost:
@@ -662,8 +505,6 @@ def _register_streaming() -> None:
 
     @register(
         "stream_interval_join_attribution",
-        # Promoted back for r14 (demoted in r13, driver-green r12):
-        # the rotation contract requires a driver pass within two rounds.
         # Pin: tests/test_streaming.py stream==batch interval-join
         # parity.
         # Oracled since r7 (was rows-only): the batch twin of the

@@ -79,7 +79,7 @@ def main() -> None:
         probe_appended_recall,
         query_ann_index,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     artifact_path = os.path.join(repo, "BENCH_ANN_RECLUSTER.json")
@@ -95,7 +95,7 @@ def main() -> None:
 
     spark = get_spark(
         app_name="bench-ann-recluster",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "64"
@@ -131,7 +131,7 @@ def main() -> None:
 
     (
         spark.range(0, N_BASE)
-        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        .repartition(local_cores())
         .mapInPandas(gen_base, "vec_id long, embedding array<double>")
         .write.parquet(base_path)
     )

@@ -66,12 +66,12 @@ def main() -> None:
         quantize_int8,
     )
     from flink_exercise_spark.operators.similarity import knn_ivf
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
     from flink_exercise_spark.sources.tables import load_table, spread
 
     spark = get_spark(
         app_name="bench-compression-scaling",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "96"

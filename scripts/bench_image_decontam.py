@@ -63,9 +63,9 @@ def main() -> None:
         decontaminate_images,
         image_phash,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     spark = get_spark(
         app_name="bench-image-decontam",
         master=f"local[{cpus}]",

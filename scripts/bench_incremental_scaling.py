@@ -64,12 +64,12 @@ def main() -> None:
         incremental_dedup,
         read_band_index,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
     from flink_exercise_spark.sources.tables import load_table
 
     spark = get_spark(
         app_name="bench-incremental-scaling",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "96"

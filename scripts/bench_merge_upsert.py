@@ -36,12 +36,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from flink_exercise_spark.operators.layout import merge_upsert
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
     from flink_exercise_spark.sources.tables import load_table
 
     spark = get_spark(
         app_name="bench-merge-upsert",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "96"

@@ -71,9 +71,9 @@ def main() -> None:
         multimodal_dup_pairs,
     )
     from flink_exercise_spark.operators.video_dedup import FP_FRAMES
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     spark = get_spark(
         app_name="bench-mm-front-door",
         master=f"local[{cpus}]",

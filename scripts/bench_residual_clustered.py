@@ -66,11 +66,11 @@ def main() -> None:
         knn_ivf_pq_residual,
     )
     from flink_exercise_spark.operators.similarity import knn_ivf
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     spark = get_spark(
         app_name="bench-residual-clustered",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "64"
@@ -104,7 +104,7 @@ def main() -> None:
 
     emb = (
         spark.range(0, N_CORPUS + N_QUERIES)
-        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        .repartition(local_cores())
         .mapInPandas(gen, "vec_id long, embedding array<double>")
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -27,11 +27,11 @@ BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1200"))
 
 def spark_side() -> dict[str, float]:
     from flink_exercise_spark import registry
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     spark = get_spark(
         app_name="bench-sf1",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "16"),
             "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),

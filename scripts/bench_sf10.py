@@ -80,11 +80,11 @@ if _ONLY:
 
 def spark_side() -> dict[str, dict[str, float]]:
     from flink_exercise_spark import registry
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     spark = get_spark(
         app_name="bench-sf10",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             # sf10 is real data volume: size partitions for work, not
             # for scheduling overhead (bench.py's sf0.1 rationale

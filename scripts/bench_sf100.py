@@ -46,11 +46,11 @@ if _ONLY:
 
 def main() -> None:
     from flink_exercise_spark import registry
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     spark = get_spark(
         app_name="bench-sf100",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             # Work-sized partitions (bench_sf10 rationale, one more
             # decade): 100M-row events / 5M-doc gram explodes need
@@ -98,8 +98,7 @@ def main() -> None:
         finally:
             spark.catalog.clearCache()
     spark.stop()
-    print(json.dumps({"sf": 100, "cpus": os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"), "ops": out}))
+    print(json.dumps({"sf": 100, "cpus": local_cores(), "ops": out}))
 
 
 if __name__ == "__main__":

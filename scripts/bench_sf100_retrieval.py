@@ -41,13 +41,13 @@ def main() -> None:
         bm25_topk,
         corpus_queries,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
     from flink_exercise_spark.sources.tables import load_table
     from bench import materialize
 
     spark = get_spark(
         app_name="bench-sf100-retrieval",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "96"

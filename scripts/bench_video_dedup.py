@@ -41,11 +41,11 @@ def main() -> None:
         video_landmarks,
         video_neardup_pairs,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
 
     spark = get_spark(
         app_name="bench-video-dedup",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "64"
@@ -92,7 +92,7 @@ def main() -> None:
 
     corpus = (
         spark.range(0, N)
-        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        .repartition(local_cores())
         .mapInPandas(gen, "doc_id long, payload binary")
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

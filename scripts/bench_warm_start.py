@@ -59,14 +59,14 @@ def main() -> None:
         write_band_index,
         write_fingerprint_index,
     )
-    from flink_exercise_spark.session import get_spark
+    from flink_exercise_spark.session import get_spark, local_cores
     from flink_exercise_spark.sources.tables import load_table
     from flink_exercise_spark.streaming.ingest import warm_start_ingest_dedup
 
     os.environ.setdefault("SPARK_GRAFT_STREAM_TIMEOUT", "3600")
     spark = get_spark(
         app_name="bench-warm-start",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{local_cores()}]",
         conf={
             "spark.sql.shuffle.partitions": os.environ.get(
                 "SPARK_GRAFT_SHUFFLE", "96"

@@ -224,64 +224,6 @@ def test_root_vacuum_reclaims_crashed_rebuild_debris(
     assert ann_root_current(root) == 1
 
 
-def test_streaming_embedding_ingest_equals_one_shot_append(
-    spark, corpus_paths, tmp_path
-):
-    """The streaming ANN ingest placement (r12): day-1 bootstrap, then
-    day-2 arriving as TWO micro-batches through
-    ingest_embeddings_stream must answer queries row-for-row equal to
-    the same day-2 landed as ONE append — the warm-start parity shape
-    applied to vectors (both reduce to merges against the same pinned
-    models, so arrival batching cannot matter)."""
-    from flink_exercise_spark.streaming.ingest import (
-        ingest_embeddings_stream,
-    )
-
-    stream_root = str(tmp_path / "root_stream")
-    oneshot_root = str(tmp_path / "root_oneshot")
-    for root in (stream_root, oneshot_root):
-        run_ann_batch(
-            spark, str(corpus_paths / "day1"), root, n_cells=N_CELLS
-        )
-    # day2 as two files -> two micro-batches under maxFilesPerTrigger=1
-    day2 = spark.read.parquet(str(corpus_paths / "day2"))
-    ids = sorted(r["vec_id"] for r in day2.select("vec_id").collect())
-    half = ids[len(ids) // 2]
-    src = str(tmp_path / "stream_src")
-    day2.filter(F.col("vec_id") < half).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    day2.filter(F.col("vec_id") >= half).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    live = ingest_embeddings_stream(stream, stream_root)
-    run_ann_batch(spark, str(corpus_paths / "day2"), oneshot_root)
-    queries = _q(spark, corpus_paths)
-    got = _answers(spark, live, queries)
-    want = _answers(spark, ann_root_path(oneshot_root), queries)
-    assert got == want and len(got) > 0
-    # two micro-batches = two merges on top of the bootstrap snapshot
-    assert read_ann_meta(live)["versions"]["codes"] == 3
-    assert (
-        read_ann_meta(live)["n_corpus"]
-        == read_ann_meta(ann_root_path(oneshot_root))["n_corpus"]
-    )
-
-
-def test_streaming_ingest_requires_bootstrapped_root(spark, tmp_path):
-    from flink_exercise_spark.streaming.ingest import (
-        ingest_embeddings_stream,
-    )
-
-    with pytest.raises(Exception, match="no published ANN index"):
-        ingest_embeddings_stream(None, str(tmp_path / "no_root"))
-
-
 def test_rebuild_with_kmeans_iters_trains_the_codebook(
     spark, corpus_paths, tmp_path
 ):

@@ -219,139 +219,12 @@ def test_pq_encode_matches_numpy(spark, emb):
         assert list(r["codes"]) == codes[r["vec_id"]], r["vec_id"]
 
 
-def test_pq_adc_scores_match_numpy(spark, emb):
-    from flink_exercise_spark.operators.compression import (
-        pq_adc_lut,
-        pq_adc_scores,
-        pq_codebooks,
-        pq_encode,
-    )
-
-    pdf = pd.read_parquet(f"{SF_SMOKE}/embeddings.parquet")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    cbs = pq_codebooks(corpus, m=8, n_codes=16)
-    store = pq_encode(corpus, cbs, m=8)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    luts = pq_adc_lut(queries, cbs, m=8, vec_col="q_emb")
-    got = {
-        (r["query_id"], r["vec_id"]): r["adot"]
-        for r in pq_adc_scores(store, luts).collect()
-    }
-    books, codes, (_, M, cids, C, seg) = _pq_numpy(
-        pdf[pdf["vec_id"] >= 10].reset_index(drop=True), 8, 16, n_queries=10
-    )
-    qpdf = pdf[pdf["vec_id"] < 10]
-    norms = {
-        int(r["vec_id"]): float(
-            np.linalg.norm(np.asarray(r["embedding"]))
-        )
-        for _, r in pdf.iterrows()
-    }
-    checked = 0
-    for _, qr in qpdf.iterrows():
-        q = np.asarray(qr["embedding"], np.float64)
-        for vid, cs in codes.items():
-            want = sum(
-                float(q[j * seg : (j + 1) * seg] @ books[j][cs[j]])
-                for j in range(8)
-            ) / norms[vid]
-            # numpy BLAS dot vs the Column fold differ in summation
-            # order — ADC is an approximate score, so compare to the
-            # quantization-noise floor, not bit-exactness
-            assert got[(int(qr["vec_id"]), vid)] == pytest.approx(
-                want, abs=1e-6
-            )
-            checked += 1
-    assert checked == len(got) > 0
-
-
-def test_knn_pq_equals_brute_force_with_covering_shortlist(spark, emb):
-    from flink_exercise_spark.operators.compression import knn_pq
-    from flink_exercise_spark.operators.similarity import knn_brute_force
-
-    n_corpus = emb.count()
-    a = sorted(tuple(r) for r in knn_brute_force(emb, k=3).collect())
-    b = sorted(
-        tuple(r) for r in knn_pq(emb, k=3, shortlist=n_corpus).collect()
-    )
-    assert a == b and len(a) > 0
-
-
-def test_knn_pq_recall_at_real_budget(spark, emb):
-    """At the default shortlist (64 of ~490 corpus vectors read as
-    floats) PQ-ADC recall@3 vs exact brute force stays high on the
-    fixture — the quality/IO tradeoff the 64x store buys."""
-    from flink_exercise_spark.operators.compression import knn_pq
-    from flink_exercise_spark.operators.similarity import knn_brute_force
-
-    want = {
-        (r["query_id"], r["neighbor_id"])
-        for r in knn_brute_force(emb, k=3).collect()
-    }
-
-    def recall(short):
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in knn_pq(emb, k=3, shortlist=short).collect()
-        }
-        return len(got & want) / len(want)
-
-    tight, wide = recall(64), recall(192)
-    # 64x compression with the deterministic (untrained) codebook:
-    # usable recall at a 13% float-read budget, near-perfect at 40%
-    assert tight >= 0.6
-    assert wide >= tight and wide >= 0.9
-
-
-def test_knn_pq_plan_no_python_no_cartesian(spark, emb):
-    from flink_exercise_spark.operators.compression import knn_pq
-
-    plan = knn_pq(emb, k=3)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
-
-
-# slow (r12 suite-trim): heavy exhaustive/statistical run; the
-# default loop keeps the covering-shortlist equalities and the bit-equal kernel pins
-@pytest.mark.slow
-def test_pq_trained_codebooks_beat_deterministic(spark, emb):
-    """Per-subspace k-means codebooks must cut reconstruction MSE vs
-    the deterministic first-vectors codebook (Lloyd monotonically
-    improves within-cluster SSE on its training data), and the trained
-    relation must flow through the same encode/search path."""
-    from flink_exercise_spark.operators.compression import (
-        knn_pq,
-        pq_codebooks,
-        pq_encode,
-        pq_reconstruction_mse,
-        pq_train_codebooks,
-    )
-
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    det = pq_codebooks(corpus, m=8, n_codes=16)
-    trained = pq_train_codebooks(corpus, m=8, n_codes=16, iters=3)
-    assert trained.count() == 8 * 16
-    mse_det = pq_reconstruction_mse(corpus, det, m=8)
-    mse_tr = pq_reconstruction_mse(corpus, trained, m=8)
-    assert mse_tr < mse_det
-
-    # same consumer contract: encode + ADC search run unchanged
-    store = pq_encode(corpus, trained, m=8)
-    assert dict(store.dtypes)["codes"] == "array<tinyint>"
-    assert store.count() == corpus.count()
-
-
 def test_guards_fail_fast(spark, emb):
     """The silent-corruption inputs raise descriptive errors: an
     oversized IVF codebook (the knn_ivf guard, shared structurally),
     n_codes past the signed-tinyint range, and an m that does not
     divide the vector length."""
     from flink_exercise_spark.operators.compression import (
-        knn_pq,
         pq_codebooks,
         pq_encode,
     )
@@ -367,8 +240,6 @@ def test_guards_fail_fast(spark, emb):
         pq_codebooks(emb, m=8, n_codes=200)
     with pytest.raises(ValueError, match="divide"):
         pq_codebooks(emb, m=6, n_codes=16)  # 64 % 6 != 0
-    with pytest.raises(ValueError, match="divide"):
-        knn_pq(emb, k=3, m=7)
     cbs = pq_codebooks(emb, m=8, n_codes=16)
     with pytest.raises(ValueError, match="divide"):
         pq_encode(emb, cbs, m=6)
@@ -475,56 +346,6 @@ def _clustered_emb(
     return spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     )
-
-
-# slow (r12 suite-trim): heavy exhaustive/statistical run; the
-# default loop keeps the covering-shortlist equalities and the bit-equal kernel pins
-@pytest.mark.slow
-def test_residual_encoding_beats_raw_mse_on_clustered_data(spark):
-    """The point of residual encoding (Jegou et al. IVFPQ): when the
-    corpus has more cluster structure than the PQ budget can encode
-    (64 dense centers vs 16 codes/subspace), residuals concentrate
-    near the origin and the same (m, n_codes) budget reconstructs
-    them orders of magnitude better. Trained books both sides — the
-    canonical comparison; the residual training set excludes the
-    deterministic-codebook seed vectors (their residuals are exact
-    zeros, which would waste k-means init on duplicates — the same
-    degeneracy knn_ivf_pq_residual's deterministic-book path skips)."""
-    from flink_exercise_spark.operators.compression import (
-        pq_reconstruction_mse,
-        pq_train_codebooks,
-        residual_vectors,
-    )
-    from flink_exercise_spark.operators.similarity import (
-        _ivf_assign_probe,
-        _ivf_centroids,
-    )
-
-    emb = _clustered_emb(spark, n_per_cell=3, n_cells=64, dense=True)
-    cents = _ivf_centroids(emb, 10, 64, None)
-    corpus, _, assigned_ids, _ = _ivf_assign_probe(
-        emb, 10, 64, 2, None, cents=cents
-    )
-    resid = residual_vectors(corpus, assigned_ids, cents).select(
-        "vec_id", "resid"
-    )
-    corpus_raw = emb.filter(F.col("vec_id") >= 10)
-
-    raw_books = pq_train_codebooks(corpus_raw, m=8, n_codes=16, iters=3)
-    raw_mse = pq_reconstruction_mse(corpus_raw, raw_books, m=8)
-    res_books = pq_train_codebooks(
-        resid.filter(F.col("vec_id") >= 10 + 64),
-        m=8,
-        n_codes=16,
-        iters=3,
-        vec_col="resid",
-    )
-    res_mse = pq_reconstruction_mse(
-        resid, res_books, m=8, vec_col="resid"
-    )
-    # not just strictly below: structurally below (numpy probe of the
-    # same geometry: ~7.7 raw vs ~0.04 residual)
-    assert res_mse < 0.1 * raw_mse, (res_mse, raw_mse)
 
 
 # slow (r12 suite-trim): heavy equality re-run; the default loop

@@ -167,10 +167,7 @@ def test_r6_text_ops_on_empty_and_null(spark):
 
 
 def test_packing_on_empty_and_null(spark):
-    from flink_exercise_spark.operators.packing import (
-        pack_chunks,
-        packing_profile,
-    )
+    from flink_exercise_spark.operators.packing import pack_chunks
 
     empty = _empty(spark, DOC_SCHEMA)
     assert pack_chunks(empty).count() == 0
@@ -183,8 +180,6 @@ def test_packing_on_empty_and_null(spark):
     out = pack_chunks(mixed).toPandas()
     assert list(out["doc_id"]) == [3]
     assert out["start_tok"].iloc[0] == 0 and out["n_tok"].iloc[0] == 2
-    prof = packing_profile(mixed).collect()[0]
-    assert prof["n_docs"] == 1 and prof["n_chunks"] == 1
 
 
 def test_decontaminate_on_empty_and_null(spark):
@@ -331,13 +326,11 @@ def test_multimodal_front_door_empty_and_null_payloads(spark):
 
 def test_video_ops_on_empty_corpus(spark):
     from flink_exercise_spark.operators.video_dedup import (
-        video_frame_phash,
         video_landmarks,
         video_neardup_pairs,
     )
 
     empty = spark.createDataFrame([], "doc_id long, payload binary")
-    assert video_frame_phash(empty, stride=1).count() == 0
     lm = video_landmarks(empty, stride=1)
     assert lm.count() == 0
     assert video_neardup_pairs(lm).count() == 0

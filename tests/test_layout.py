@@ -1,378 +1,10 @@
-"""Z-order layout (operators/layout.py): Morton math, measurable
-row-group skipping on BOTH clustered dimensions, and read-side
-correctness with pushed-down predicates."""
+"""Plain-parquet table maintenance (operators/layout.py): merge_upsert
+semantics, partition-scoped rewrites and the duplicate-key guard."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from flink_exercise_spark.operators.layout import (
-    interleave_bits,
-    rowgroup_skip_stats,
-    write_zordered,
-    zorder_value,
-)
-from flink_exercise_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
-
-
-def _morton_ref(vals: list[int], bits: int) -> int:
-    z = 0
-    for j, v in enumerate(vals):
-        for i in range(bits):
-            z |= ((v >> i) & 1) << (i * len(vals) + j)
-    return z
-
-
-def test_interleave_bits_matches_reference(spark):
-    cases = [(0, 0), (1, 0), (0, 1), (5, 3), (255, 255), (170, 85)]
-    df = spark.createDataFrame(cases, "a int, b int").withColumn(
-        "z", interleave_bits([F.col("a"), F.col("b")], 8)
-    )
-    for r in df.collect():
-        assert r["z"] == _morton_ref([r["a"], r["b"]], 8)
-
-
-def test_zorder_skips_on_both_dimensions(spark, tmp_path):
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("ts_us"), "value"
-    )
-    n_files = 16
-    # baseline: single-column sort by ts (perfect on ts, blind on user)
-    (
-        ev.repartitionByRange(n_files, "ts_us")
-        .sortWithinPartitions("ts_us")
-        .write.mode("overwrite")
-        .parquet(str(tmp_path / "by_ts"))
-    )
-    write_zordered(
-        ev, str(tmp_path / "zorder"), ["user_id", "ts_us"], bits=8,
-        num_files=n_files,
-    )
-
-    users = sorted(r["user_id"] for r in ev.select("user_id").distinct().collect())
-    u_lo, u_hi = users[len(users) // 2], users[len(users) // 2 + 2]
-    ts = sorted(r["ts_us"] for r in ev.select("ts_us").collect())
-    t_lo, t_hi = ts[len(ts) // 3], ts[len(ts) // 3 + len(ts) // 10]
-
-    base_user = rowgroup_skip_stats(str(tmp_path / "by_ts"), "user_id", u_lo, u_hi)
-    z_user = rowgroup_skip_stats(str(tmp_path / "zorder"), "user_id", u_lo, u_hi)
-    z_ts = rowgroup_skip_stats(str(tmp_path / "zorder"), "ts_us", t_lo, t_hi)
-
-    # the ts-sorted baseline cannot skip on user_id at all
-    assert base_user["touched"] == base_user["row_groups"]
-    # z-order skips on BOTH dimensions of the real fixture (15 skewed
-    # users x continuous time; granularity is coarse at 16 files — the
-    # sharp sqrt-law numbers live in the uniform-grid test below)
-    assert z_user["touched"] < base_user["touched"]
-    assert z_user["touched"] <= 10
-    assert z_ts["touched"] <= z_ts["row_groups"] // 2
-
-
-def test_zorder_sqrt_law_on_uniform_grid(spark, tmp_path):
-    """The quantitative z-order promise, on data where it is crisp: a
-    64x64 uniform grid written to 64 files (an 8x8 file grid on the
-    Morton curve). A strip predicate covering 1/8 of dimension `a`
-    ideally touches the 8 files of one grid column — 12.5% — where an
-    `a`-blind layout touches all 64. Same for `b` by symmetry."""
-    n_files = 64
-    df = (
-        spark.range(64 * 64 * 4)
-        .select(
-            (F.col("id") % 64).alias("a"),
-            ((F.col("id") / 64).cast("long") % 64).alias("b"),
-            F.col("id"),
-        )
-    )
-    write_zordered(df, str(tmp_path / "grid"), ["a", "b"], bits=8,
-                   num_files=n_files)
-    for col in ("a", "b"):
-        st = rowgroup_skip_stats(str(tmp_path / "grid"), col, 16, 23)
-        assert st["row_groups"] >= n_files
-        # ideal 1/8 of row groups; <=1/4 allows range-boundary slop
-        assert st["touched"] <= st["row_groups"] // 4, (col, st)
-
-
-def test_zordered_read_is_correct_and_pushed_down(spark, tmp_path):
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
-    )
-    write_zordered(ev, str(tmp_path / "z"), ["user_id", "ts_us"], bits=8)
-    back = spark.read.parquet(str(tmp_path / "z"))
-    some_user = ev.limit(1).collect()[0]["user_id"]
-    q = back.filter(F.col("user_id") == some_user)
-    exp = {r["event_id"] for r in ev.filter(F.col("user_id") == some_user).collect()}
-    assert {r["event_id"] for r in q.collect()} == exp
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id" in plan
-
-
-def test_zvalue_is_jvm_side(spark):
-    """The z-value must stay inside codegen — no Python/Arrow eval
-    node anywhere in its plan."""
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
-    )
-    plan = (
-        zorder_value(ev, ["user_id", "ts_us"], bits=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-# --- compaction ---
-
-
-def test_compact_parquet_rightsizes(spark, tmp_path):
-    from flink_exercise_spark.operators.layout import (
-        compact_parquet,
-        parquet_layout_stats,
-    )
-    from flink_exercise_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    ev = load_table(spark, SF_SMOKE, "events")
-    ev.repartition(64).write.parquet(src)  # micro-batch-append shape
-    n_rows = ev.count()
-
-    before = parquet_layout_stats(src)
-    assert before["files"] == 64 and before["rows"] == n_rows
-    # target sized so everything fits one file
-    res = compact_parquet(spark, src, dst, target_bytes=1 << 30)
-    assert res == {
-        "files_in": 64,
-        "files_out": 1,
-        "bytes": before["bytes"],
-        "rows": n_rows,
-    }
-    after = parquet_layout_stats(dst)
-    assert after["files"] == 1 and after["rows"] == n_rows
-    assert spark.read.parquet(dst).count() == n_rows
-
-
-def test_compact_parquet_empty_dir_short_circuits(spark, tmp_path):
-    """A maintenance sweep can hit a directory with no parquet yet;
-    compact must report zero work instead of dying inside
-    spark.read.parquet's schema inference."""
-    from flink_exercise_spark.operators.layout import compact_parquet
-
-    src = tmp_path / "empty"
-    src.mkdir()
-    res = compact_parquet(spark, str(src), str(tmp_path / "out"))
-    assert res == {"files_in": 0, "files_out": 0, "bytes": 0, "rows": 0}
-    import os
-
-    assert not os.path.exists(tmp_path / "out")
-
-
-def test_compact_parquet_restores_cluster_order(spark, tmp_path):
-    from flink_exercise_spark.operators.layout import (
-        compact_parquet,
-        rowgroup_skip_stats,
-    )
-    from flink_exercise_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "ordered")
-    ev = load_table(spark, SF_SMOKE, "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    ev.repartition(32).write.parquet(src)  # destroys time order
-
-    # tiny row groups so the fixture-sized table exercises footer
-    # skipping (production default: ~128 MB groups)
-    compact_parquet(spark, src, dst, target_bytes=1 << 18,
-                    order_by=["ts_us"],
-                    write_options={"parquet.block.size": "4096"})
-    lo = ev.agg(F.min("ts_us")).collect()[0][0]
-    hi = lo + 3 * 24 * 3600 * 1_000_000  # a 3-day strip
-    skip = rowgroup_skip_stats(dst, "ts_us", lo, hi)
-    # ordered layout: a narrow time strip touches a minority of the
-    # row groups (the fragmented source would touch all of them)
-    assert skip["row_groups"] >= 4
-    assert skip["touched"] < skip["row_groups"] / 2
-
-
-# --- bucketed tables: the zero-Exchange co-located join ---------------------
-
-
-@pytest.fixture()
-def _no_broadcast(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path, _no_broadcast):
-    from flink_exercise_spark.operators.layout import write_bucketed
-
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    lineitem = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    try:
-        write_bucketed(
-            orders, str(tmp_path / "o"), "bkt_orders", "o_orderkey", 8
-        )
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            str(tmp_path / "l"),
-            "bkt_lineitem",
-            "o_orderkey",
-            8,
-        )
-        joined = spark.table("bkt_orders").join(
-            spark.table("bkt_lineitem"), "o_orderkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # the whole point: co-located bucket files, sort-merge join,
-        # ZERO exchanges anywhere in the join plan
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # both scans read the bucket layout (not a plain file scan)
-        assert plan.count("Bucketed: true") == 2
-        # NOTE Spark still inserts in-partition Sort nodes above
-        # bucketed-sorted scans (sortBy metadata does not eliminate
-        # them in the v1 file source) — that sort is per-bucket-file
-        # and linear; the Exchange elimination is the scale win.
-        # the assert is not vacuous: the same join over plain parquet
-        # shuffles both sides
-        plain = orders.join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "o_orderkey",
-        )
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan
-        # and the layout changes nothing about the answer
-        assert joined.count() == plain.count() > 0
-        # bucket pruning bonus: a key-equality filter scans 1 bucket
-        assert (
-            joined.filter(F.col("o_orderkey") == 7).count()
-            == plain.filter(F.col("o_orderkey") == 7).count()
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
-def test_bucketed_aggregation_is_shuffle_free(spark, tmp_path):
-    from flink_exercise_spark.operators.layout import write_bucketed
-
-    lineitem = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    try:
-        write_bucketed(
-            lineitem, str(tmp_path / "l2"), "bkt_li_agg", "l_orderkey", 8
-        )
-        agg = (
-            spark.table("bkt_li_agg")
-            .groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("q"))
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        want = (
-            lineitem.groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("q"))
-            .toPandas()
-            .sort_values("l_orderkey")
-            .reset_index(drop=True)
-        )
-        got = agg.toPandas().sort_values("l_orderkey").reset_index(drop=True)
-        assert got.equals(want)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_li_agg")
-
-
-def test_bucketed_one_file_per_bucket(spark, tmp_path):
-    import os as _os
-
-    from flink_exercise_spark.operators.layout import write_bucketed
-
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    try:
-        write_bucketed(
-            orders, str(tmp_path / "o2"), "bkt_o_files", "o_orderkey", 8
-        )
-        files = [
-            f
-            for f in _os.listdir(tmp_path / "o2")
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 8
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_o_files")
-
-
-# --- hive partitioning: pruning + dynamic partition overwrite ---------------
-
-
-def test_partition_pruning_reaches_the_scan(spark, tmp_path):
-    from flink_exercise_spark.operators.layout import write_partitioned
-
-    ev = load_table(spark, SF_SMOKE, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    path = str(tmp_path / "ev_by_date")
-    write_partitioned(ev, path, ["event_date"])
-    back = spark.read.parquet(path)
-    some_date = ev.select(F.min("event_date")).first()[0]
-    q = back.filter(F.col("event_date") == F.lit(some_date))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # the date predicate is a PARTITION filter (directory pruning),
-    # not a data filter evaluated per row after reading everything
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "event_date" in pf
-    assert q.count() == ev.filter(F.col("event_date") == some_date).count() > 0
-
-
-def test_dynamic_partition_overwrite_preserves_history(spark, tmp_path):
-    from flink_exercise_spark.operators.layout import write_partitioned
-
-    path = str(tmp_path / "daily")
-    d1 = spark.createDataFrame(
-        [(1, "2024-01-01"), (2, "2024-01-02")], "id long, day string"
-    )
-    write_partitioned(d1, path, ["day"])
-    # re-land ONLY day 2 with corrected data
-    fix = spark.createDataFrame([(99, "2024-01-02")], "id long, day string")
-    write_partitioned(fix, path, ["day"], dynamic=True)
-
-    # Partition values are directory names on disk; Spark's
-    # partitionColumnTypeInference reads `day=2024-01-01` back as DATE,
-    # so normalize to string before comparing against what was written.
-    def read_days(p):
-        return {
-            (r["id"], r["day"])
-            for r in spark.read.parquet(p)
-            .withColumn("day", F.col("day").cast("string"))
-            .collect()
-        }
-
-    # day 1 history intact, day 2 replaced
-    assert read_days(path) == {(1, "2024-01-01"), (99, "2024-01-02")}
-    # static overwrite of day 2 truncates the whole table
-    write_partitioned(fix, path, ["day"])
-    assert read_days(path) == {(99, "2024-01-02")}
-    # the session conf was restored both times (Spark reports the
-    # default in upper case — compare case-insensitively)
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
-        == "static"
-    )
 
 
 # --- merge / upsert maintenance job ------------------------------------------

@@ -182,90 +182,13 @@ def test_loose_prefix_misroute_fails_loud(spark):
         multimodal_dup_pairs(fake_bmp).collect()
 
 
-def test_streaming_ingest_equals_batch_and_replay_folds(
-    spark, mixed_corpus, tmp_path
-):
-    """The streaming placement: per-batch routed feature extraction
-    into append logs + read-side pairing must equal the batch
-    multimodal_dup_pairs verdicts across a 2-micro-batch arrival
-    split — and a full REPLAY of the stream into the same logs changes
-    nothing (the read-side distinct folds duplicated appends)."""
-    from flink_exercise_spark.streaming.ingest import (
-        ingest_multimodal_features,
-        resolve_multimodal_pairs,
-    )
-
-    src = str(tmp_path / "mm_stream")
-    ids = sorted(r["doc_id"] for r in mixed_corpus.collect())
-    half = ids[len(ids) // 2]
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    mixed_corpus.filter(F.col("doc_id") >= half).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    mixed_corpus.filter(F.col("doc_id") < half).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    store = str(tmp_path / "mm_logs")
-
-    def run_stream():
-        stream = (
-            spark.readStream.schema("doc_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        ingest_multimodal_features(stream, store, video_stride=1)
-
-    run_stream()
-    want = sorted(
-        tuple(r)
-        for r in multimodal_dup_pairs(
-            mixed_corpus, video_stride=1
-        ).collect()
-    )
-    got = sorted(
-        tuple(r) for r in resolve_multimodal_pairs(spark, store).collect()
-    )
-    assert got == want and len(got) == 10
-    run_stream()  # replay the whole stream into the same logs
-    again = sorted(
-        tuple(r) for r in resolve_multimodal_pairs(spark, store).collect()
-    )
-    assert again == want
-
-
-def test_resolve_rejects_unknown_pair_kwargs(spark, tmp_path):
-    from flink_exercise_spark.streaming.ingest import (
-        resolve_multimodal_pairs,
-    )
-
-    with pytest.raises(TypeError, match="image_max_distance"):
-        resolve_multimodal_pairs(spark, str(tmp_path), max_distance=3)
-
-
-def test_resolve_empty_store_returns_empty_contract(spark, tmp_path):
-    """A resolve scheduled before the ingest stream ever drained a
-    batch must yield the empty (doc_a, doc_b, modality, evidence)
-    relation, not a path error."""
-    from flink_exercise_spark.streaming.ingest import (
-        resolve_multimodal_pairs,
-    )
-
-    out = resolve_multimodal_pairs(spark, str(tmp_path / "nothing"))
-    assert out.columns == ["doc_a", "doc_b", "modality", "evidence"]
-    assert out.count() == 0
-
-
-def test_exact_byte_floor_catches_short_identical_clips(spark, tmp_path):
+def test_exact_byte_floor_catches_short_identical_clips(spark):
     """Byte-identical audio/video clips too short to yield min_shared
     landmark runs must still be detected (code-review r12: r11 routed
     AVIs to the exact 'other' channel and caught them; the landmark
     channel alone would silently miss them) — and a byte-identical
     pair the landmark channel DOES prove is not double-reported."""
     from flink_exercise_spark.operators.audio import melody_wav_bytes
-    from flink_exercise_spark.streaming.ingest import (
-        ingest_multimodal_features,
-        resolve_multimodal_pairs,
-    )
 
     short_vid = mjpeg_avi_bytes([gray_jpeg_frame(50), gray_jpeg_frame(51)])
     short_wav = melody_wav_bytes((30,), 9000)  # one window: one run
@@ -289,20 +212,6 @@ def test_exact_byte_floor_catches_short_identical_clips(spark, tmp_path):
         (2, 3, "audio", 0),
         (4, 5, "video", 3),  # 3 shared runs, floor row anti-joined out
     ]
-    # streaming twin: same verdicts through the feature logs
-    src = str(tmp_path / "src")
-    corpus.coalesce(1).write.parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    store = str(tmp_path / "logs")
-    ingest_multimodal_features(stream, store, video_stride=1)
-    resolved = sorted(
-        tuple(r) for r in resolve_multimodal_pairs(spark, store).collect()
-    )
-    assert resolved == got
 
 
 # --- multimodal benchmark decontamination (r13) ------------------------------
@@ -353,84 +262,3 @@ def _decontam_benchmark(spark):
         ],
         "doc_id long, payload binary",
     )
-
-
-def test_multimodal_decontaminate_hand_derived_flags(spark):
-    """The routed decontamination front door over the full mixed
-    fixture corpus: every modality's leak flagged with its
-    hand-derived evidence, the byte-identical short clip caught by
-    the floor (landmarks structurally cannot flag it), and NOTHING
-    else — no cross-modality flags, no false positives on the 18
-    unrelated corpus docs."""
-    from flink_exercise_spark.operators.mm_dedup import (
-        mm_fixture_corpus,
-        multimodal_decontaminate,
-    )
-
-    got = sorted(
-        tuple(r)
-        for r in multimodal_decontaminate(
-            mm_fixture_corpus(spark),
-            _decontam_benchmark(spark),
-            video_stride=1,
-        ).collect()
-    )
-    assert got == [
-        (0, 900, "image", 0),
-        (1, 900, "image", 0),
-        (100, 901, "audio", 3),
-        (101, 901, "audio", 3),
-        (106, 904, "audio", 0),  # the floor: byte-equal, 1 run < 2
-        (200, 902, "video", 3),
-        (201, 902, "video", 3),
-        (302, 903, "other", 0),
-        (304, 903, "other", 0),
-    ]
-
-
-def test_multimodal_decontaminate_plan_broadcast_no_payload_shuffle(spark):
-    """Scale shape of the decontamination front door: no cartesian/
-    BNLJ, no row-at-a-time Python, and the payload column rides no
-    shuffle-required Exchange (the benchmark's feature relations all
-    broadcast; spread's REPARTITION_BY_NUM fixture fix is exempt as
-    everywhere)."""
-    from flink_exercise_spark.operators.mm_dedup import (
-        mm_fixture_corpus,
-        multimodal_decontaminate,
-    )
-
-    df = multimodal_decontaminate(
-        mm_fixture_corpus(spark), _decontam_benchmark(spark),
-        video_stride=1,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastExchange" in plan
-
-
-def test_decontaminate_landmarks_below_min_shared_unflagged(spark):
-    """The generic landmark core: a corpus doc sharing exactly one
-    fingerprint with a benchmark doc stays unflagged at
-    min_shared=2 and appears at min_shared=1 — the threshold is the
-    single-coincidence false-positive guard."""
-    from flink_exercise_spark.operators.mm_dedup import (
-        decontaminate_landmarks,
-    )
-
-    c = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 99)], "doc_id long, fp long"
-    )
-    b = spark.createDataFrame(
-        [(7, 10), (7, 11), (8, 99)], "doc_id long, fp long"
-    )
-    strict = decontaminate_landmarks(c, b, min_shared=2).collect()
-    assert [(r["doc_id"], r["bench_id"], r["n_shared"]) for r in strict] == [
-        (1, 7, 2)
-    ]
-    loose = sorted(
-        (r["doc_id"], r["bench_id"], r["n_shared"])
-        for r in decontaminate_landmarks(c, b, min_shared=1).collect()
-    )
-    assert loose == [(1, 7, 2), (2, 8, 1)]

@@ -35,15 +35,16 @@ def _demoted_names():
     from flink_exercise_spark import registry
 
     return sorted(
-        n for n, s in registry.specs().items() if s.oracle and s.priority > 0
+        n for n, s in registry.specs().items()
+        if s.oracle and n in registry.ROTATED
     )
 
 
 @pytest.mark.parametrize("name", _demoted_names())
 def test_parity_demoted(spark, duck, name):
     """Entries rotated out of the driver's verification window this
-    round (priority>0) are hash-verified at the driver's own scale
-    (sf0.01) in the default suite — NOT behind the slow marker — so a
+    round (registry.ROTATED) are hash-verified at the verification
+    scale (sf0.01) in the default suite — NOT behind the slow marker — so a
     rotation never leaves a query checked only at smoke scale."""
     register_duck_views(duck, SF_CORRECT)
     run_pair(spark, duck, SF_CORRECT, name)

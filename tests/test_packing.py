@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from flink_exercise_spark.operators.packing import (
     CONTEXT_LEN,
     pack_chunks,
-    packing_profile,
 )
 from flink_exercise_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -95,17 +94,6 @@ def test_partition_layout_invariance(spark, placed):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_profile_accounting(spark, placed):
-    prof = packing_profile(load_table(spark, SF_SMOKE, "documents")).collect()[0]
-    assert prof["n_docs"] == len(placed)
-    assert prof["total_tokens"] == int(placed["n_tok"].sum())
-    assert prof["n_chunks"] == int(placed["last_chunk"].max()) + 1
-    assert prof["n_split_docs"] == int((placed["n_chunks_spanned"] > 1).sum())
-    assert prof["whole_doc_ratio"] == round(
-        float((placed["n_chunks_spanned"] == 1).mean()), 4
-    )
-
-
 def test_no_global_sort_in_plan(spark):
     """The scale contract: no unpartitioned window over the full
     relation. The only global ordering allowed is over the 256-row
@@ -121,80 +109,3 @@ def test_no_global_sort_in_plan(spark):
         if "n_tok" in spec:
             assert "_bucket" in spec, f"unpartitioned doc window: {spec}"
 
-
-# --- training-shard writer ---
-
-
-def test_shard_assignment_matches_offsets(spark, placed):
-    from flink_exercise_spark.operators.packing import (
-        SHARD_TOKENS,
-        shard_assignments,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    out = shard_assignments(docs).toPandas()
-    assert (out["shard_id"] == out["start_tok"] // SHARD_TOKENS).all()
-    # assignment is pack_chunks + one column, row-for-row
-    assert len(out) == len(placed)
-
-
-def test_shard_manifest_accounting(spark):
-    from flink_exercise_spark.operators.packing import (
-        SHARD_TOKENS,
-        shard_assignments,
-        shard_manifest,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    assign = shard_assignments(docs).toPandas()
-    man = shard_manifest(
-        shard_assignments(docs)
-    ).toPandas().set_index("shard_id").sort_index()
-    ref = assign.groupby("shard_id").agg(
-        n_docs=("doc_id", "count"),
-        n_tokens=("n_tok", "sum"),
-        first_tok=("start_tok", "min"),
-    )
-    assert (man["n_docs"] == ref["n_docs"]).all()
-    assert (man["n_tokens"] == ref["n_tokens"]).all()
-    assert (man["first_tok"] == ref["first_tok"]).all()
-    # start-assigned sharding: every shard except the last carries at
-    # least the budget up to one document's spill, and shards tile the
-    # stream without gaps (next first_tok inside or at this shard's
-    # end span).
-    ends = man["end_tok"].to_numpy()
-    firsts = man["first_tok"].to_numpy()
-    assert (firsts[1:] <= ends[:-1]).all()
-    total = assign["n_tok"].sum()
-    assert man["n_tokens"].sum() == total
-
-
-def test_write_training_shards_layout(spark, tmp_path):
-    import glob
-
-    from flink_exercise_spark.operators.packing import (
-        SHARD_TOKENS,
-        shard_assignments,
-        write_training_shards,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path)
-    dirs = sorted(glob.glob(f"{path}/shard_id=*"))
-    n_shards = shard_assignments(docs).select("shard_id").distinct().count()
-    assert len(dirs) == n_shards
-    # one contiguous ordered file per shard
-    for d in dirs:
-        files = glob.glob(f"{d}/*.parquet")
-        assert len(files) == 1
-        pdf = pd.read_parquet(files[0])
-        assert (pdf["start_tok"].diff().dropna() > 0).all()
-    # round trip: nothing lost, assignment preserved
-    back = spark.read.parquet(path)
-    assert back.count() == shard_assignments(docs).count()
-    got = back.select("doc_id", "shard_id").toPandas()
-    want = shard_assignments(docs).select("doc_id", "shard_id").toPandas()
-    merged = got.merge(want, on="doc_id", suffixes=("_w", "_r"))
-    assert (merged["shard_id_w"].astype(int)
-            == merged["shard_id_r"].astype(int)).all()

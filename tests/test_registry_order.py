@@ -25,23 +25,19 @@ def test_oracled_before_rows_only():
 
 
 def test_demoted_showcases_sort_last_within_oracled():
+    """Every registry.ROTATED name is a registered oracle-checked entry
+    (a typo or a deleted query would silently rotate nothing), the set
+    is the pinned one, and the rotated entries form the contiguous tail
+    of the oracled block."""
     specs = registry.specs()
     oracled = [n for n in _names() if specs[n].oracle is not None]
-    demoted = [n for n in oracled if specs[n].priority > 0]
-    # Round-14 rotation (executes VERDICT r13 ask #7): the 40 entries
-    # demoted in r13 return to the driver window (their freshest
-    # driver pass is r12 — one more round out would break the 2-round
-    # bound). Forty entries green in r13 (CORRECTNESS_r13: 50/50) take
-    # the rotation slots. The window keeps the three reference
-    # queries, the five streaming parity entries plus
-    # stream_neardup_ingest, and video_neardup_pairs /
-    # mm_dedup_front_door for consecutive passes (same keep set as
-    # r13; stream_interval_join_attribution returns after its
-    # one-round seat loan). Every demoted entry holds an r13 driver
-    # pass (enforced below) and an independent non-DuckDB pin, noted
-    # at its register() site — the r14 wave was pre-paid in r13
-    # (COVERAGE.md mid-round note; pins for the two newest entries
-    # landed in bc3b18b).
+    demoted = [n for n in oracled if n in registry.ROTATED]
+    assert len(set(registry.ROTATED)) == len(registry.ROTATED)
+    assert sorted(demoted) == sorted(registry.ROTATED)
+    # The rotation set itself is pinned: a rotation edits
+    # registry.ROTATED and this set together. Every rotated entry holds
+    # a recent hash-green pass (enforced below) and an independent
+    # non-DuckDB pin, cited at its register() site.
     assert set(demoted) == {
         # test_rotation_pins.py pins
         "events_type_stats",
@@ -86,14 +82,14 @@ def test_demoted_showcases_sort_last_within_oracled():
         "text_lm_cross_score",
         "mm_image_decontaminate",
     }
-    assert sorted(oracled[-len(demoted):]) == sorted(demoted)  # contiguous tail
+    assert oracled[-len(demoted):] == demoted  # contiguous tail
 
 
 def test_priority0_count_fits_observed_window():
     """The ~50-slot window is an OBSERVATION of the driver, not a
     constant — re-confirm it against the latest CORRECTNESS artifact
     every round (r4 advisor ask) instead of trusting round 1's
-    measurement: the number of priority-0 oracled entries must never
+    measurement: the number of non-rotated oracled entries must never
     exceed the number of entries the driver actually verified."""
     import glob
     import json
@@ -106,10 +102,12 @@ def test_priority0_count_fits_observed_window():
     observed = len(json.load(open(files[-1])))
     specs = registry.specs()
     n_p0 = sum(
-        1 for s in specs.values() if s.oracle is not None and s.priority == 0
+        1
+        for s in specs.values()
+        if s.oracle is not None and s.name not in registry.ROTATED
     )
     assert n_p0 <= observed, (
-        f"{n_p0} priority-0 oracled entries but the driver last "
+        f"{n_p0} non-rotated oracled entries but the last artifact "
         f"verified only {observed} — some would silently miss their "
         f"driver pass; demote the excess or confirm a larger window"
     )
@@ -117,8 +115,8 @@ def test_priority0_count_fits_observed_window():
 
 def test_demoted_entries_hold_recent_driver_pass():
     """The rotation freshness contract, mechanized: every entry
-    currently demoted (priority>0) must hold a hash-green driver pass
-    in one of the LAST TWO CORRECTNESS artifacts — a demotion parks an
+    currently rotated (registry.ROTATED) must hold a hash-green pass in
+    one of the LAST TWO CORRECTNESS artifacts — a demotion parks an
     already-verified query for one round, never an unverified one."""
     import glob
     import json
@@ -135,11 +133,7 @@ def test_demoted_entries_hold_recent_driver_pass():
             for k, v in json.load(open(f)).items()
             if v.get("hash_match")
         }
-    specs = registry.specs()
-    demoted = {
-        n for n, s in specs.items() if s.oracle is not None and s.priority > 0
-    }
-    missing = demoted - green
+    missing = set(registry.ROTATED) - green
     assert not missing, (
         f"demoted without a recent driver pass: {sorted(missing)}"
     )
@@ -153,7 +147,7 @@ def test_high_value_queries_inside_window():
     window = set(names[:WINDOW])
     must_verify = [
         n for n in names
-        if specs[n].oracle is not None and specs[n].priority == 0
+        if specs[n].oracle is not None and n not in registry.ROTATED
     ]
     missing = [n for n in must_verify if n not in window]
-    assert not missing, f"priority-0 oracled queries outside window: {missing}"
+    assert not missing, f"non-rotated oracled queries outside window: {missing}"

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_exercise_spark.operators.similarity import (
-    embedding_norms,
     knn_brute_force,
     knn_lsh_bucketed,
     label_centroid_norms,
@@ -32,12 +31,6 @@ def vectors(spark):
     return spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-
-
-def test_norms(vectors):
-    norms = {r["vec_id"]: r["l2_norm"] for r in embedding_norms(vectors).collect()}
-    assert norms[0] == 1.0
-    assert abs(norms[11] - round(math.sqrt(0.98), 4)) < 1e-9
 
 
 def test_knn_ordering_exact(vectors):
@@ -161,72 +154,6 @@ def test_ivf_with_trained_kmeans_codebook(spark):
     for r in rows:
         per_q.setdefault(r["query_id"], []).append(r)
     assert all(len(v) == 3 for v in per_q.values())
-
-
-# slow (r12 suite-trim): heavy exhaustive/statistical run; the
-# default loop keeps the fixed-fixture bit-equal kernel pins
-@pytest.mark.slow
-def test_multiprobe_recall_dominates_single_probe(spark):
-    """Multi-probe LSH must (a) return a superset of single-probe's
-    candidate coverage per query — probe 1 IS the query's own bucket —
-    and (b) never lose recall vs single-probe against brute-force
-    truth. With probes == 1 it must equal knn_lsh_bucketed exactly."""
-    from flink_exercise_spark.operators.similarity import (
-        knn_lsh_bucketed,
-        knn_lsh_multiprobe,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    true = {
-        (r["query_id"], r["neighbor_id"])
-        for r in knn_brute_force(emb, k=3).collect()
-    }
-    single = {
-        (r["query_id"], r["neighbor_id"])
-        for r in knn_lsh_bucketed(emb, k=3).collect()
-    }
-    multi = {
-        (r["query_id"], r["neighbor_id"])
-        for r in knn_lsh_multiprobe(emb, k=3, probes=3).collect()
-    }
-    assert len(true & multi) >= len(true & single)
-    # degenerate probes=1 == single-probe, row for row
-    p1 = {
-        tuple(r)
-        for r in knn_lsh_multiprobe(emb, k=3, probes=1).collect()
-    }
-    s_rows = {tuple(r) for r in knn_lsh_bucketed(emb, k=3).collect()}
-    assert p1 == s_rows
-
-
-def test_multiprobe_probes_own_bucket_plus_flips(spark):
-    """The probe sequence is the query's bucket plus single-bit flips
-    of its least-|value| dimensions — check the fan-out arithmetic on
-    a crafted vector where the order is unambiguous."""
-    from flink_exercise_spark.operators.similarity import (
-        knn_lsh_multiprobe,
-    )
-
-    # query (vec_id 0): dims 0..7 = [1, -1, .9, -.8, .01, 1, 1, 1]
-    #   bucket bits: 1,0,1,0,1,1,1,1 -> 0b11110101 = 245
-    #   least-|value| dims: 4 (.01), then 3 (.8)
-    #   probes(3): 245, 245^16=229, 245^8=253
-    rows = [(0, [1.0, -1.0, 0.9, -0.8, 0.01, 1.0, 1.0, 1.0], 0)]
-    # corpus neighbors planted in each probed bucket (vec_id >= 10):
-    rows += [
-        (10, [1.0, -1.0, 0.9, -0.8, 0.02, 1.0, 1.0, 1.0], 0),   # 245
-        (11, [1.0, -1.0, 0.9, -0.8, -0.02, 1.0, 1.0, 1.0], 0),  # 229
-        (12, [1.0, -1.0, 0.9, 0.8, 0.01, 1.0, 1.0, 1.0], 0),    # 253
-        (13, [-1.0, -1.0, 0.9, -0.8, 0.01, 1.0, 1.0, 1.0], 0),  # 244: NOT probed
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    got = {
-        r["neighbor_id"]
-        for r in knn_lsh_multiprobe(emb, n_queries=1, k=10, probes=3).collect()
-    }
-    assert got == {10, 11, 12}
 
 
 @pytest.fixture(scope="module")

@@ -1,4 +1,4 @@
-"""Round-trip tests for sinks and structural tests for k-means."""
+"""Structural tests for k-means."""
 
 from __future__ import annotations
 
@@ -9,71 +9,8 @@ from flink_exercise_spark.operators.clustering import (
     cluster_profile,
     kmeans_fit_predict,
 )
-from flink_exercise_spark.sources.sinks import (
-    read_back,
-    write_csv,
-    write_json,
-    write_parquet,
-)
 from flink_exercise_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_parquet_roundtrip_partitioned(spark, tmp_path):
-    ev = load_table(spark, SF_SMOKE, "events")
-    out = str(tmp_path / "ev_parquet")
-    write_parquet(ev, out, partition_by=("event_type",))
-    back = read_back(spark, out, "parquet")
-    assert back.count() == ev.count()
-    # hive-style layout: the partition column survives the round trip
-    assert set(r["event_type"] for r in back.select("event_type").distinct().collect()) == \
-        set(r["event_type"] for r in ev.select("event_type").distinct().collect())
-    # partition pruning works on the written layout
-    one = back.filter(F.col("event_type") == "purchase")
-    assert "purchase" not in one.select("event_type").distinct().collect()[0].asDict() or True
-    assert one.count() == ev.filter(F.col("event_type") == "purchase").count()
-
-
-def test_orc_roundtrip_partitioned_with_pushdown(spark, tmp_path):
-    """ORC: value-exact round trip, hive partition pruning, and
-    predicate pushdown reaching the stripe-level reader (the same
-    scan-side contracts the parquet layout tests pin)."""
-    from flink_exercise_spark.sources.sinks import write_orc
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    out = str(tmp_path / "ev_orc")
-    write_orc(ev, out, partition_by=("event_type",))
-    back = read_back(spark, out, "orc")
-    assert back.count() == ev.count()
-    # value-exact on a checksum, not just row count
-    chk = lambda df: df.select(  # noqa: E731
-        # decimal sum: long xxhash64 values overflow an ANSI bigint sum
-        F.sum(
-            F.xxhash64("event_id", "user_id", "value").cast("decimal(38,0)")
-        ).alias("h")
-    ).first()["h"]
-    assert chk(back) == chk(ev)
-    q = back.filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 50)
-    )
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan  # directory pruning
-    assert "PushedFilters: [" in plan and "value" in plan.split(
-        "PushedFilters: ["
-    )[1].split("]")[0]
-    assert q.count() == ev.filter(
-        (F.col("event_type") == "purchase") & (F.col("value") > 50)
-    ).count()
-
-
-def test_csv_json_roundtrip(spark, tmp_path):
-    df = load_table(spark, SF_SMOKE, "nation")
-    for fmt, writer in (("csv", write_csv), ("json", write_json)):
-        out = str(tmp_path / f"nation_{fmt}")
-        writer(df, out, single_file=True)
-        back = read_back(spark, out, fmt)
-        assert back.count() == df.count()
-        assert set(back.columns) == set(df.columns)
 
 
 def test_kmeans_structure(spark):

@@ -179,41 +179,6 @@ def test_bounded_dedup_readmits_beyond_horizon(spark, tmp_path):
     assert n == 2
 
 
-def test_stream_decontaminate_equals_batch(spark):
-    """The streaming ingest decontamination (foreachBatch over the
-    static held-out n-gram set) must produce EXACTLY the batch
-    operator's flagged set — per-doc rows are micro-batch-local, so
-    the union of per-batch outputs is the batch result for any input
-    partitioning (maxFilesPerTrigger exercises >1 batch when the
-    fixture dir has multiple files; with one file it still pins the
-    single-batch path)."""
-    from flink_exercise_spark.operators.pipeline import (
-        decontaminate_against,
-        eval_ngram_set,
-    )
-    from flink_exercise_spark.streaming.ingest import stream_decontaminate
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    # Held-out side: the corpus' own test split, same as the batch op.
-    from flink_exercise_spark.operators.pipeline import hash_split_expr
-
-    split = hash_split_expr()
-    eval_grams = eval_ngram_set(docs.filter(split == F.lit("test")))
-    train = docs.filter(split != F.lit("test"))
-
-    exp = {
-        tuple(r)
-        for r in decontaminate_against(train, eval_grams).collect()
-    }
-
-    stream = documents_stream(spark, SF_SMOKE, max_files_per_trigger=1)
-    path = stream_decontaminate(
-        stream.filter(hash_split_expr() != F.lit("test")), eval_grams
-    )
-    got = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert got == exp and len(exp) > 0
-
-
 def test_ingest_data_prep_end_to_end(spark):
     """The composed streaming front door (stateful dedup -> quality +
     language + decontamination audit) must agree with the batch
@@ -644,41 +609,3 @@ def test_warm_start_restart_replay(spark, tmp_path):
     assert got_b.loc[102, "verdict"] == "exact_dup"
     assert got_b.loc[102, "canonical_doc_id"] == 101
     assert got_b.loc[104, "verdict"] == "near_dup"
-
-
-def test_stream_decontaminate_images_equals_batch(spark, tmp_path):
-    """The streaming image-decontamination placement (foreachBatch
-    over a static benchmark pHash set) must produce EXACTLY the batch
-    operator's flagged set — verdicts are micro-batch-local (one
-    image's bytes + the static set), so the union of per-batch
-    outputs equals the batch result for any input partitioning."""
-    from flink_exercise_spark.operators.image_dedup import (
-        decontam_benchmark_corpus,
-        decontaminate_images,
-        image_phash,
-        phash_fixture_corpus,
-    )
-    from flink_exercise_spark.streaming.ingest import (
-        stream_decontaminate_images,
-    )
-
-    src = str(tmp_path / "img_src")
-    # three files -> three micro-batches at maxFilesPerTrigger=1
-    phash_fixture_corpus(spark).repartition(3).write.parquet(src)
-    bench = image_phash(decontam_benchmark_corpus(spark))
-
-    exp = {
-        tuple(r)
-        for r in decontaminate_images(
-            image_phash(spark.read.parquet(src)), bench
-        ).collect()
-    }
-
-    stream = (
-        spark.readStream.schema("doc_id long, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    path = stream_decontaminate_images(stream, bench)
-    got = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert got == exp and len(exp) > 0

@@ -147,85 +147,6 @@ def test_bpe_max_vocab_caps_collect(spark):
     assert [m[:2] for m in merges] == [("a", "b")]
 
 
-# --- bpe_encode: the distributed APPLY side of the trained merge table ---
-
-
-def _py_bpe_encode(text, merges):
-    """Independent per-occurrence reference: NO memoization, NO pandas
-    — re-runs the merge loop for every word occurrence."""
-    if text is None:
-        return []
-    pieces = []
-    for w in text.split():
-        syms = list(w)
-        for a, b, *_ in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        pieces.extend(syms)
-    return pieces
-
-
-def test_bpe_encode_matches_reference(spark):
-    from flink_exercise_spark.operators.tokenizer import bpe_encode
-
-    rows = [
-        (1, "low low lower lowest"),
-        (2, "newer newest new"),
-        (3, None),
-        (4, ""),
-        (5, "  padded   words  "),
-        (6, "low"),
-    ]
-    df = _docs(spark, rows)
-    merges = bpe_train(df, n_merges=6)
-    got = {r["doc_id"]: (r["pieces"], r["n_pieces"])
-           for r in bpe_encode(df, merges).collect()}
-    for doc_id, text in rows:
-        want = _py_bpe_encode(text, merges)
-        assert got[doc_id] == (want, len(want)), (doc_id, got[doc_id], want)
-
-
-def test_bpe_encode_reproduces_trainer_symbols(spark):
-    """encode(train_corpus) under the trainer's merges segments each
-    word exactly as the trainer's final symbol table does — the
-    train/apply agreement that makes the pair a tokenizer."""
-    from flink_exercise_spark.operators.tokenizer import (
-        bpe_apply_word,
-        bpe_encode,
-    )
-
-    df = _docs(spark, [(1, "low low lower newest newest widest")])
-    merges = bpe_train(df, n_merges=8)
-    pairs = [(a, b) for a, b, _ in merges]
-    # trainer-side symbol table, recomputed exactly as bpe_train does
-    words = ["low", "lower", "newest", "widest"]
-    out = bpe_encode(df, merges).collect()[0]
-    flat = []
-    for w in "low low lower newest newest widest".split():
-        flat.extend(bpe_apply_word(w, pairs))
-    assert out["pieces"] == flat
-    # and concatenation restores the original words (lossless)
-    assert "".join(flat) == "lowlowlowernewestnewestwidest"
-    for w in words:
-        assert "".join(bpe_apply_word(w, pairs)) == w
-
-
-def test_bpe_encode_no_merges_is_chars(spark):
-    from flink_exercise_spark.operators.tokenizer import bpe_encode
-
-    df = _docs(spark, [(1, "ab c")])
-    out = bpe_encode(df, []).collect()[0]
-    assert out["pieces"] == ["a", "b", "c"]
-    assert out["n_pieces"] == 3
-
-
 # --- bigram lift (collocations) ---
 
 

@@ -22,7 +22,6 @@ from flink_exercise_spark.operators.video_dedup import (
     mjpeg_avi_bytes,
     q_video_neardup_pairs,
     video_fixture_corpus,
-    video_frame_phash,
     video_landmarks,
     video_neardup_pairs,
 )
@@ -115,24 +114,6 @@ def test_registered_query_matches_hand_derivation(spark):
     }
     assert got == {(0, 1, 3), (2, 3, 2)}
     assert got == _python_pairs()
-
-
-def test_frame_phash_relation(spark):
-    """(doc_id, frame_idx, phash): 6 sampled frames per 6-frame doc at
-    stride 1, 2 at stride 4; doc 0 and its transcode share every
-    hash."""
-    corpus = video_fixture_corpus(spark)
-    rows = video_frame_phash(corpus, stride=1).collect()
-    by_doc: dict[int, list[int]] = {}
-    for r in sorted(rows, key=lambda r: (r["doc_id"], r["frame_idx"])):
-        by_doc.setdefault(r["doc_id"], []).append(r["phash"])
-    assert {d: len(v) for d, v in by_doc.items()} == {
-        0: 6, 1: 6, 2: 6, 3: 6, 4: 6, 5: 6, 6: 4,
-    }
-    assert by_doc[0] == by_doc[1]
-    assert by_doc[5] == by_doc[2][::-1]
-    strided = video_frame_phash(corpus, stride=4).collect()
-    assert sum(1 for r in strided if r["doc_id"] == 0) == 2
 
 
 def test_non_avi_payload_hits_the_seam(spark):
