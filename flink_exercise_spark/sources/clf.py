@@ -66,30 +66,39 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
     # their own projections: CollapseProject never inlines a
     # multiply-referenced non-trivial alias, so each evaluates exactly
     # once per row (asserted in tests/test_plans.py).
-    # The split limit is -1 + rand()*0 — identically -1, but the rand()
-    # term makes the ``_p`` projection NON-DETERMINISTIC, which forbids
-    # Catalyst from pushing any downstream filter below it (pushing a
-    # Filter through a Project requires every project expression to be
-    # deterministic). Without the barrier, a filter on any parsed
-    # column is pushed down by SUBSTITUTING the alias — inlining the
-    # whole regexp_replace+split chain into the Filter, so the regex
-    # runs once in the predicate and again in the projection (the
-    # duplicated-evaluation trap of guide §4.4 in SQL form), and for a
-    # derived input the filter keeps sinking below the ``spread``
-    # repartition, dragging its whole input chain onto the scan's
-    # un-spread partition, i.e. ONE core. Measured on the rendered
-    # round-trip at sf0.1: 0.97 s without the barrier (line rendered
-    # twice + regex-matched once per row on one core pre-spread, then
-    # rendered and matched again post-spread) vs 0.42 s with it (one
-    # render + one regex, all on spread partitions). Filters stop just
-    # above this projection and read the already-computed ``_p``.
-    # rand(seed=0), NOT rand(): an unseeded rand draws a fresh seed at
-    # every plan build, so two builds of the same query produce
+    #
+    # Two determinism barriers keep every downstream filter reading
+    # computed columns. Pushing a Filter through a Project requires
+    # every project expression to be deterministic; otherwise Catalyst
+    # pushes it by SUBSTITUTING the aliases, and FilterExec does no
+    # subexpression elimination, so each substituted copy runs per row
+    # before the projection computes it all again.
+    # 1. ``_p``: the split limit is -1 + rand*0. It blocks the regex
+    #    re-drive: without it a filter on any parsed column inlines the
+    #    regexp_replace+split chain into the Filter, and on a derived
+    #    input the filter sinks below the ``spread`` repartition onto
+    #    the scan's one un-spread partition. Measured: 0.97 s vs 0.42 s
+    #    on the rendered round-trip at sf0.1; 10.2 s vs 0.85 s of task
+    #    CPU for the (window, host) counts of 80k lines on 4 cores.
+    # 2. The typed-column projection: ``host``'s group index is
+    #    1 + rand*0 (see _parse_columns). It blocks the re-parse:
+    #    without it valid_lines' ``host != ''`` and the isnotnull(ts)/
+    #    isnotnull(window_start) filters Catalyst infers from a join key
+    #    (batch Q1 joins counts to per-window maxima) sink below this
+    #    projection, inlining the timestamp parse and its ``ok`` guard
+    #    about four times. Measured on 80k lines, 4 cores: the clf_batch
+    #    pass fell from 6.5 s to 1.5 s of task CPU and Q1 from 1.8 s to
+    #    0.47 s wall. The barrier sits on ``host`` because ColumnPruning
+    #    drops unreferenced columns, non-deterministic ones included,
+    #    and every validity filter reads ``host``.
+    # Both barriers must stay arithmetic: Catalyst folds the
+    # ``CASE WHEN rand(0) >= 0 THEN x ELSE ... END`` form away, but not
+    # rand*0.0. rand(seed=0), NOT rand(): an unseeded rand draws a fresh
+    # seed at every plan build, so two builds of the same query produce
     # different codegen source and every execution pays a whole-stage
     # codegen + JIT recompile (~0.5 s, measured). A pinned seed keeps
-    # the expression flagged non-deterministic (the barrier) while the
-    # generated code stays byte-identical across builds — codegen
-    # cache hit.
+    # the expression non-deterministic while the generated code stays
+    # byte-identical across builds — codegen cache hit.
     # The three expression trees are memoized per input column name
     # (functions/exprmemo.py): ~0.2 s of py4j construction per call,
     # paid once per process instead of once per parse.
@@ -106,7 +115,7 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
             lambda: F.split(
                 F.col("_m"),
                 F.lit(_FS),
-                F.lit(-1) + (F.rand(seed=0) * F.lit(0.0)).cast("int"),
+                F.lit(-1) + _nondeterministic_zero(),
             ),
         ),
     )
@@ -115,6 +124,12 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
             ("parse_clf.columns", column), lambda: _parse_columns(column)
         )
     )
+
+
+def _nondeterministic_zero() -> Column:
+    """Identically 0, but non-deterministic: the determinism barrier
+    (see parse_clf)."""
+    return (F.rand(seed=0) * F.lit(0.0)).cast("int")
 
 
 def _parse_columns(column: str) -> list[Column]:
@@ -130,13 +145,13 @@ def _parse_columns(column: str) -> list[Column]:
         & ~F.col(column).contains(_FS)
     )
 
-    def g(i: int) -> Column:
+    def g(i: int | Column) -> Column:
         # F.get is NULL-safe out of bounds (non-matching lines split to
         # a single field), and the `ok` guard rejects pathological
         # lines that contain \x01 themselves.
         return F.when(ok, F.get("_p", i))
 
-    def s(i: int) -> Column:
+    def s(i: int | Column) -> Column:
         # String groups keep the reference's '' no-match sentinel.
         return F.coalesce(g(i), F.lit(""))
 
@@ -147,7 +162,9 @@ def _parse_columns(column: str) -> list[Column]:
     )
     return [
         F.col(column).alias("raw"),
-        s(1).alias("host"),
+        # The output projection's barrier (see parse_clf); s()'s
+        # coalesce keeps host non-null, as for every string group.
+        s(F.lit(1) + _nondeterministic_zero()).alias("host"),
         g(2).try_cast("int").alias("day"),
         s(3).alias("month"),
         g(4).try_cast("int").alias("year"),
@@ -170,10 +187,10 @@ def valid_lines(parsed: DataFrame) -> DataFrame:
     parse-success predicate by construction (see the ``ok`` guard in
     parse_clf: a matching line's host group is \\S+, never empty; every
     non-match — including a NULL line — yields the '' sentinel). The
-    filter is plain and deterministic; the non-deterministic ``_p``
-    projection inside parse_clf is what stops Catalyst from
-    substituting the regex chain into it (see the barrier comment
-    there)."""
+    filter is plain and deterministic; the non-deterministic ``host``
+    column is what stops Catalyst from substituting the parse into it,
+    so it reads the computed ``host`` (see the barrier comment in
+    parse_clf)."""
     return parsed.filter(F.col("host") != F.lit(""))
 
 

@@ -95,3 +95,52 @@ def test_reference_q3_semantics_on_golden(spark):
     # and the idiomatic AVG differs (NULL excluded): (1502+0+99)/3
     idiomatic = v.groupBy().agg(F.floor(F.avg("reply_bytes")).alias("a")).collect()
     assert idiomatic[0]["a"] == 533
+
+
+def test_parse_clf_schema_pinned(spark):
+    """The typed LogLine schema, nullability included: the determinism
+    barrier on ``host`` must not change it (string groups keep the ''
+    sentinel and stay non-null; numeric groups and ``ts`` are NULL on
+    a non-matching line)."""
+    raw = spark.createDataFrame([(l,) for l in GOLDEN_LINES], ["value"])
+    got = [
+        (f.name, f.dataType.simpleString(), f.nullable)
+        for f in parse_clf(raw).schema.fields
+    ]
+    assert got == [
+        ("raw", "string", True),
+        ("host", "string", False),
+        ("day", "int", True),
+        ("month", "string", False),
+        ("year", "int", True),
+        ("hour", "int", True),
+        ("minute", "int", True),
+        ("second", "int", True),
+        ("timezone", "string", False),
+        ("ts", "timestamp", True),
+        ("http_method", "string", False),
+        ("resource", "string", False),
+        ("http_version", "string", False),
+        ("http_reply_code", "int", True),
+        ("reply_bytes", "int", True),
+    ]
+
+
+def test_cli_batch_answers_on_golden_log(spark):
+    """The CLI's batch Q1-Q3 per window equal the hand-computed values
+    of the clf_golden_log VALUES oracle (sources/clf.py)."""
+    from flink_exercise_spark.__main__ import batch_queries
+    from flink_exercise_spark.sources.clf import GOLDEN_LOG_PATH
+
+    logs = valid_lines(parse_clf(spark.read.text(GOLDEN_LOG_PATH)))
+    q1, q2, q3 = batch_queries(logs)
+    assert sorted(tuple(r) for r in q1.collect()) == [
+        (806198400, "piweba3y.prodigy.com", 4),
+        (808876800, "piweba3y.prodigy.com", 7),
+    ]
+    assert sorted(tuple(r) for r in q2.collect()) == [
+        (806198400, 8), (808876800, 8),
+    ]
+    assert sorted(tuple(r) for r in q3.collect()) == [
+        (806198400, 27082), (808876800, 23343),
+    ]

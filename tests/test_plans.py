@@ -168,14 +168,19 @@ def test_clf_valid_filter_does_not_redrive_regex(spark):
     and two regex matches per row that way, 0.97 s vs 0.42 s on the
     sf0.1 round-trip).
 
-    SPARK-UPGRADE COUPLING (ADVICE r13): the barrier is the
-    ``rand(seed=0) * 0.0`` term in the ``_p`` projection (clf.py) —
-    it relies on Catalyst NOT constant-folding rand*0. A future Spark
-    release that adds that simplification silently drops the barrier
-    and reintroduces the double-regex/one-core plan; THIS test is the
-    tripwire and must stay in the must-run gate on any Spark upgrade
-    (the RLIKE/regexp_replace counts and the Filter-above-Exchange
-    assertion below all fail if the barrier stops working)."""
+    SPARK-UPGRADE COUPLING: parse_clf has two determinism barriers,
+    both an arithmetic ``rand(seed=0) * 0.0`` term that relies on
+    Catalyst NOT constant-folding rand*0 (it does fold the
+    ``CASE WHEN rand(0) >= 0`` form, so neither may become a CASE).
+    The ``_p`` barrier (split limit) blocks the regex re-drive: the
+    RLIKE/regexp_replace counts and the Filter-above-Exchange assertion
+    below fail without it (10.2 s vs 0.85 s of task CPU for the
+    (window, host) counts of 80k lines on 4 cores). The output-
+    projection barrier (``host``'s group index) blocks the re-parse by
+    pushed or inferred filters; test_clf_filters_read_computed_columns
+    is its tripwire (Q1's scan stage paid 4.6-5.1 s of task CPU
+    without it, 0.85 s for the same counts without the join). Both
+    tests must stay in the must-run gate on any Spark upgrade."""
     import re
 
     from flink_exercise_spark.sources.clf import parse_clf, valid_lines
@@ -199,6 +204,47 @@ def test_clf_valid_filter_does_not_redrive_regex(spark):
     # Exchange in print order is the aggregate's, above the filter.)
     ops = rplan[: rplan.index("(1) Scan")]
     assert ops.index("Filter") < ops.rindex("Exchange")
+
+
+def _optimized_filter_conditions(df) -> list[str]:
+    """Every Filter condition in ``df``'s optimized logical plan."""
+    conds = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]  # noqa: SLF001
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            conds.append(node.condition().toString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return conds
+
+
+def test_clf_filters_read_computed_columns(spark):
+    """Filters above parse_clf must read its computed columns, never
+    re-derive them: the output-projection barrier stops valid_lines'
+    ``host != ''`` and the isnotnull filters Catalyst infers from Q1's
+    join key from sinking below the typed-column projection, where they
+    would re-run the timestamp parse and its ``ok`` guard (``_p[0]``,
+    ``size(_p)``, ``Contains(value, \\x01)``) per row before the
+    projection computes it all again."""
+    from flink_exercise_spark.__main__ import batch_queries
+    from flink_exercise_spark.sources.clf import (
+        GOLDEN_LOG_PATH,
+        parse_clf,
+        valid_lines,
+    )
+
+    logs = valid_lines(parse_clf(spark.read.text(GOLDEN_LOG_PATH)))
+    q1, _, _ = batch_queries(logs)
+    golden = specs()["clf_golden_log"].fn(spark, SF_SMOKE)
+    for df in (q1, golden):
+        conds = _optimized_filter_conditions(df)
+        for c in conds:
+            for banned in ("gettimestamp", "regexp_replace", "split(",
+                           "Contains(value"):
+                assert banned not in c, f"{banned} re-derived in Filter: {c}"
+        # Not vacuous: the validity filter is there, reading ``host``.
+        assert any("host#" in c for c in conds)
 
 
 def test_string_key_argmax_stays_hash_aggregate(spark):
