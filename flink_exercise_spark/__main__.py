@@ -28,9 +28,48 @@ LABELS = {
 }
 
 
+def host_window_counts(logs, window: str = "31 days"):
+    """The one relation ``batch_queries`` derives Q1-Q3 from, before its
+    checkpoint: per (window, host), ``n_requests`` and ``_bytes`` (the
+    reply sizes summed with NULL as 0, StreamingJob.scala:97)."""
+    from pyspark.sql import functions as F
+
+    from flink_exercise_spark.operators.aggregates import window_key_counts
+
+    size = F.coalesce(F.col("reply_bytes").cast("long"), F.lit(0))
+    return window_key_counts(
+        logs, "host", window, "ts", F.sum(size).alias("_bytes")
+    )
+
+
 def batch_queries(logs, window: str = "31 days"):
     """The three reference queries over parsed valid log lines, batch
     form — exposed for plan tests and reuse; ``main`` prints these.
+
+    Like the reference (StreamingJob.scala:85-107: one parsed ``logs``
+    stream feeds all three), one call scans, parses and aggregates the
+    input ONCE: ``host_window_counts`` is locally checkpointed and
+    - Q1 is the arg-max over it (``top_key_per_window``);
+    - Q2 counts its rows per window — exact, since ``valid_lines``
+      leaves ``host`` non-null, so each (window, host) group is one
+      distinct host;
+    - Q3 is ``floor(sum(_bytes) / sum(n_requests))`` — ``floor_avg``'s
+      value while a window's byte total stays below 2^53.
+
+    The checkpoint is lazy (``eager=False``), but under AQE building
+    it plans the shared relation adaptively, which runs its scan+parse
+    map stage here, at call time, not in the first action on Q1-Q3.
+
+    Not ``persist``: the cache manager matches plans by result, and a
+    text scan's file index compares equal on its root paths, so a later
+    call over the same path would be served the first call's stale
+    blocks. ``localCheckpoint`` makes a fresh RDD per call. Its caveat
+    is the standard one (operators/dedup.py): local checkpoint blocks
+    do not survive executor loss, so losing one mid-run fails the
+    remaining queries instead of recomputing them. The blocks are
+    tracked like the operators' persists (caching.py): the next
+    registry query, or ``release_persisted()``, frees them, so run
+    Q1-Q3's actions first.
 
     Q1 goes through the library's two-pass HashAggregate arg-max, not
     ``max_by(host, struct(...))``: the struct-ordered aggregate plans
@@ -40,19 +79,17 @@ def batch_queries(logs, window: str = "31 days"):
     """
     from pyspark.sql import functions as F
 
-    from flink_exercise_spark.functions.scalars import floor_avg, win_start
-    from flink_exercise_spark.operators.aggregates import (
-        top_host_per_window_any_key,
-    )
+    from flink_exercise_spark.caching import local_checkpoint_tracked
+    from flink_exercise_spark.operators.aggregates import top_key_per_window
 
-    q1 = top_host_per_window_any_key(
-        logs, key="host", window=window
-    ).withColumnRenamed("top_user", "top_client")
-    q2 = logs.groupBy(win_start("ts", window)).agg(
-        F.countDistinct("host").alias("n_unique_clients")
+    shared = local_checkpoint_tracked(host_window_counts(logs, window))
+    q1 = top_key_per_window(shared, key="host").withColumnRenamed(
+        "top_user", "top_client"
     )
-    q3 = logs.groupBy(win_start("ts", window)).agg(
-        floor_avg("reply_bytes").alias("avg_reply_bytes")
+    per_window = shared.groupBy("window_start")
+    q2 = per_window.agg(F.count(F.lit(1)).alias("n_unique_clients"))
+    q3 = per_window.agg(
+        F.floor(F.sum("_bytes") / F.sum("n_requests")).alias("avg_reply_bytes")
     )
     return q1, q2, q3
 

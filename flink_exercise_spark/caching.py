@@ -13,34 +13,50 @@ Resolution: operators register persists here instead of calling
 query's tracked persists on entry (flink_exercise_spark/registry.py).
 Callers composing operators manually can call ``release_persisted()``
 whenever their action has run. Worst-case live footprint is one query's
-persists — bounded, not monotone.
+persists — bounded, not monotone. A local checkpoint (the CLI's shared
+batch relation) is tracked the same way, since its blocks live until
+the RDD is garbage-collected otherwise.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
-_TRACKED: list[DataFrame] = []
+_TRACKED: list[Callable[[], object]] = []  # one release call per entry
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK) and record it for deferred
     release via ``release_persisted``."""
     df.persist()
-    _TRACKED.append(df)
+    _TRACKED.append(lambda: df.unpersist(blocking=False))
     return df
 
 
+def local_checkpoint_tracked(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)``, its blocks recorded for
+    deferred release via ``release_persisted``. Unlike a persist, a
+    released checkpoint cannot be recomputed: every action on the
+    result must run before the release point."""
+    out = df.localCheckpoint(eager=False)
+    # The plan is a LogicalRDD over the RDD that holds the blocks.
+    rdd = out._jdf.queryExecution().analyzed().rdd()  # noqa: SLF001
+    _TRACKED.append(lambda: rdd.unpersist(False))
+    return out
+
+
 def release_persisted() -> int:
-    """Unpersist every tracked relation (non-blocking). Returns the
+    """Release every tracked relation (non-blocking). Returns the
     number released. Safe to call at any time — unpersisting a
     relation that was already freed (e.g. by ``clearCache``) is a
     no-op."""
     n = 0
     while _TRACKED:
-        df = _TRACKED.pop()
+        release = _TRACKED.pop()
         try:
-            df.unpersist(blocking=False)
+            release()
         except Exception:  # noqa: BLE001
             # The owning session was stopped between queries (its
             # cached blocks died with it); a dead handle must not

@@ -133,30 +133,22 @@ def packed_argmax_counts(counts: DataFrame, key: str = "user_id") -> DataFrame:
     )
 
 
-def top_host_per_window_any_key(
+def window_key_counts(
     events: DataFrame, key: str = "user_id", window: str = WINDOW_31D,
-    ts: str = "ts",
+    ts: str = "ts", *aggs,
 ) -> DataFrame:
-    """A6/Q1 for arbitrary (incl. string) key domains — the reference's
-    actual host key is a string (StreamingJob.scala:39,91), which the
-    packed-BIGINT form can't carry.
-
-    Two-pass HashAggregate shape that never sorts and never packs:
-    1. per-(window, key) counts;
-    2. per-window max count;
-    3. broadcast the tiny per-window maxima back onto the counts and
-       keep rows at the max, then one more hash agg picks the
-       deterministic tie-break winner (max key).
-    Both full-relation aggregations are two-phase HashAggregates and
-    the reduction join broadcasts — the shapes that scale to 100 TB;
-    no window function over the counts relation. The only sort is the
-    final tie-break aggregate over the rows-at-max relation (~#windows
-    rows; Spark cannot hash-aggregate string agg buffers) — asserted
-    in tests/test_plans.py.
-    """
-    counts = events.groupBy(win_start(ts, window), F.col(key)).agg(
-        F.count(F.lit(1)).alias("n_requests")
+    """Step 1 of ``top_host_per_window_any_key``: per-(window, key)
+    ``n_requests`` (one two-phase HashAggregate), plus any extra
+    per-group ``aggs`` a caller wants carried in the same pass."""
+    return events.groupBy(win_start(ts, window), F.col(key)).agg(
+        F.count(F.lit(1)).alias("n_requests"), *aggs
     )
+
+
+def top_key_per_window(counts: DataFrame, key: str = "user_id") -> DataFrame:
+    """Step 2 of ``top_host_per_window_any_key``: the arg-max over a
+    ``window_key_counts`` relation (columns ``window_start``, ``key``,
+    ``n_requests``; others are ignored)."""
     wmax = counts.groupBy("window_start").agg(
         F.max("n_requests").alias("n_requests")
     )
@@ -169,6 +161,33 @@ def top_host_per_window_any_key(
         )
         .select("window_start", "top_user", "n_requests")
     )
+
+
+def top_host_per_window_any_key(
+    events: DataFrame, key: str = "user_id", window: str = WINDOW_31D,
+    ts: str = "ts",
+) -> DataFrame:
+    """A6/Q1 for arbitrary (incl. string) key domains — the reference's
+    actual host key is a string (StreamingJob.scala:39,91), which the
+    packed-BIGINT form can't carry.
+
+    Two-pass HashAggregate shape that never sorts and never packs:
+    1. per-(window, key) counts (``window_key_counts``);
+    2. per-window max count;
+    3. broadcast the tiny per-window maxima back onto the counts and
+       keep rows at the max, then one more hash agg picks the
+       deterministic tie-break winner (max key).
+    Steps 2-3 are ``top_key_per_window``, split out so a caller that
+    already holds the counts (``__main__.batch_queries``, which derives
+    Q1-Q3 from one checkpointed counts table) runs the same arg-max.
+    Both full-relation aggregations are two-phase HashAggregates and
+    the reduction join broadcasts — the shapes that scale to 100 TB;
+    no window function over the counts relation. The only sort is the
+    final tie-break aggregate over the rows-at-max relation (~#windows
+    rows; Spark cannot hash-aggregate string agg buffers) — asserted
+    in tests/test_plans.py.
+    """
+    return top_key_per_window(window_key_counts(events, key, window, ts), key)
 
 
 def top_k_hosts_per_window(

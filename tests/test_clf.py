@@ -126,14 +126,33 @@ def test_parse_clf_schema_pinned(spark):
     ]
 
 
+# The CLI batch Q1-Q3 output schemas, (name, type, nullable).
+BATCH_SCHEMAS = (
+    [("window_start", "bigint", True), ("top_client", "string", True),
+     ("n_requests", "bigint", True)],
+    [("window_start", "bigint", True), ("n_unique_clients", "bigint", False)],
+    [("window_start", "bigint", True), ("avg_reply_bytes", "bigint", True)],
+)
+
+
+def _schemas(dfs):
+    return tuple(
+        [(f.name, f.dataType.simpleString(), f.nullable)
+         for f in df.schema.fields]
+        for df in dfs
+    )
+
+
 def test_cli_batch_answers_on_golden_log(spark):
     """The CLI's batch Q1-Q3 per window equal the hand-computed values
-    of the clf_golden_log VALUES oracle (sources/clf.py)."""
+    of the clf_golden_log VALUES oracle (sources/clf.py), with the
+    pinned output schemas."""
     from flink_exercise_spark.__main__ import batch_queries
     from flink_exercise_spark.sources.clf import GOLDEN_LOG_PATH
 
     logs = valid_lines(parse_clf(spark.read.text(GOLDEN_LOG_PATH)))
     q1, q2, q3 = batch_queries(logs)
+    assert _schemas((q1, q2, q3)) == BATCH_SCHEMAS
     assert sorted(tuple(r) for r in q1.collect()) == [
         (806198400, "piweba3y.prodigy.com", 4),
         (808876800, "piweba3y.prodigy.com", 7),
@@ -144,3 +163,79 @@ def test_cli_batch_answers_on_golden_log(spark):
     assert sorted(tuple(r) for r in q3.collect()) == [
         (806198400, 27082), (808876800, 23343),
     ]
+
+
+EDGE_LINES = [
+    # July 1995 window: a.com and b.com tie at the maximum (2 each),
+    # so the max host, b.com, wins; c.com has one request.
+    'a.com - - [03/Jul/1995:10:00:00 -0400] "GET /a HTTP/1.0" 200 100',
+    'a.com - - [03/Jul/1995:11:00:00 -0400] "GET /b HTTP/1.0" 200 -',
+    'b.com - - [04/Jul/1995:09:00:00 +0000] "GET /c HTTP/1.0" 200 7',
+    'b.com - - [05/Jul/1995:09:00:00 +0200] "HEAD /d HTTP/V1.0" 304 0',
+    'c.com - - [06/Jul/1995:00:00:00 -0400] "POST /e HTTP/1.0" 200 50',
+    # A later window where every size is '-': Q3 is 0, not NULL.
+    'd.com - - [25/Aug/1995:12:00:00 -0400] "GET /f HTTP/1.0" 404 -',
+    'd.com - - [26/Aug/1995:12:00:00 -0400] "GET /g HTTP/1.0" 404 -',
+    'e.com - - [27/Aug/1995:12:00:00 -0400] "GET /h HTTP/1.0" 404 -',
+    # Malformed lines: dropped by every query.
+    "not a log line",
+    "",
+    'x.com - - [03/Jul/1995:10:00:00 -0400] "GET /a HTTP/1.0" 200 12ab',
+    'x.com - - [03/Jul/1995:10:00:00] "GET /a HTTP/1.0" 200 1',
+]
+
+
+def _plain_python_answers(lines):
+    """Q1-Q3 per window from ``lines`` with ``re`` and ``datetime`` only."""
+    import re
+    from collections import Counter, defaultdict
+
+    clf = re.compile(
+        r'^(\S+) - - \[(\d{2}/\w{3}/\d{4}:\d{2}:\d{2}:\d{2} [+-]\d{4})\] '
+        r'"\w+ \S+ HTTP/V?\d\.\d" \d{3} (\d+|-)$'
+    )
+    span = 31 * 86400
+    hosts, sizes = defaultdict(Counter), defaultdict(list)
+    for line in lines:
+        m = clf.match(line)
+        if not m:
+            continue
+        t = dt.datetime.strptime(m[2], "%d/%b/%Y:%H:%M:%S %z").timestamp()
+        w = int(t) // span * span
+        hosts[w][m[1]] += 1
+        sizes[w].append(0 if m[3] == "-" else int(m[3]))
+    q1 = {w: max((n, h) for h, n in c.items())[::-1] for w, c in hosts.items()}
+    q2 = {w: len(c) for w, c in hosts.items()}
+    q3 = {w: sum(s) // len(s) for w, s in sizes.items()}
+    return q1, q2, q3
+
+
+def test_cli_batch_edge_cases_match_plain_python(spark):
+    """Ties, an all-'-' window, malformed lines and two windows: the
+    CLI's batch Q1-Q3 equal a plain-Python evaluation of the lines."""
+    from flink_exercise_spark.__main__ import batch_queries
+
+    raw = spark.createDataFrame([(l,) for l in EDGE_LINES], ["value"])
+    q1, q2, q3 = batch_queries(valid_lines(parse_clf(raw)))
+    got = (
+        {r[0]: (r[1], r[2]) for r in q1.collect()},
+        {r[0]: r[1] for r in q2.collect()},
+        {r[0]: r[1] for r in q3.collect()},
+    )
+    want = _plain_python_answers(EDGE_LINES)
+    assert got == want
+    # The edge cases are really there.
+    july, aug = sorted(want[0])
+    assert want[0][july] == ("b.com", 2)
+    assert (want[1][july], want[1][aug]) == (3, 2)
+    assert want[2][aug] == 0
+
+
+def test_cli_batch_empty_input(spark):
+    """No lines: three empty results with the pinned schemas."""
+    from flink_exercise_spark.__main__ import batch_queries
+
+    raw = spark.createDataFrame([], "value string")
+    qs = batch_queries(valid_lines(parse_clf(raw)))
+    assert _schemas(qs) == BATCH_SCHEMAS
+    assert [q.collect() for q in qs] == [[], [], []]

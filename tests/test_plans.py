@@ -206,17 +206,25 @@ def test_clf_valid_filter_does_not_redrive_regex(spark):
     assert ops.index("Filter") < ops.rindex("Exchange")
 
 
-def _optimized_filter_conditions(df) -> list[str]:
-    """Every Filter condition in ``df``'s optimized logical plan."""
-    conds = []
+def _optimized_nodes(df) -> list:
+    """Every node of ``df``'s optimized logical plan (JVM objects)."""
+    nodes = []
     stack = [df._jdf.queryExecution().optimizedPlan()]  # noqa: SLF001
     while stack:
         node = stack.pop()
-        if node.nodeName() == "Filter":
-            conds.append(node.condition().toString())
+        nodes.append(node)
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return conds
+    return nodes
+
+
+def _optimized_filter_conditions(df) -> list[str]:
+    """Every Filter condition in ``df``'s optimized logical plan."""
+    return [
+        n.condition().toString()
+        for n in _optimized_nodes(df)
+        if n.nodeName() == "Filter"
+    ]
 
 
 def test_clf_filters_read_computed_columns(spark):
@@ -226,8 +234,10 @@ def test_clf_filters_read_computed_columns(spark):
     join key from sinking below the typed-column projection, where they
     would re-run the timestamp parse and its ``ok`` guard (``_p[0]``,
     ``size(_p)``, ``Contains(value, \\x01)``) per row before the
-    projection computes it all again."""
-    from flink_exercise_spark.__main__ import batch_queries
+    projection computes it all again. The CLI's batch queries parse
+    under a checkpoint, so their half inspects the relation that
+    ``batch_queries`` checkpoints."""
+    from flink_exercise_spark.__main__ import host_window_counts
     from flink_exercise_spark.sources.clf import (
         GOLDEN_LOG_PATH,
         parse_clf,
@@ -235,9 +245,9 @@ def test_clf_filters_read_computed_columns(spark):
     )
 
     logs = valid_lines(parse_clf(spark.read.text(GOLDEN_LOG_PATH)))
-    q1, _, _ = batch_queries(logs)
+    shared = host_window_counts(logs)
     golden = specs()["clf_golden_log"].fn(spark, SF_SMOKE)
-    for df in (q1, golden):
+    for df in (shared, golden):
         conds = _optimized_filter_conditions(df)
         for c in conds:
             for banned in ("gettimestamp", "regexp_replace", "split(",
@@ -245,6 +255,33 @@ def test_clf_filters_read_computed_columns(spark):
                 assert banned not in c, f"{banned} re-derived in Filter: {c}"
         # Not vacuous: the validity filter is there, reading ``host``.
         assert any("host#" in c for c in conds)
+
+
+def test_batch_queries_share_one_checkpointed_scan(spark):
+    """The CLI's batch Q1-Q3 read one checkpointed per-(window, host)
+    relation, as the reference feeds one parsed stream to all three:
+    no query scans the input itself, and the shared relation scans it
+    once."""
+    from flink_exercise_spark.__main__ import (
+        batch_queries,
+        host_window_counts,
+    )
+    from flink_exercise_spark.sources.clf import (
+        GOLDEN_LOG_PATH,
+        parse_clf,
+        valid_lines,
+    )
+
+    logs = valid_lines(parse_clf(spark.read.text(GOLDEN_LOG_PATH)))
+    for df in batch_queries(logs):
+        names = [n.nodeName() for n in _optimized_nodes(df)]
+        assert not [n for n in names if "Relation" in n], names
+        assert "LogicalRDD" in names, names
+        executed = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        assert "FileScan" not in executed, executed
+    shared = host_window_counts(logs)
+    executed = shared._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert executed.count("FileScan") == 1, executed
 
 
 def test_string_key_argmax_stays_hash_aggregate(spark):
