@@ -38,7 +38,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_exercise_spark.caching import persist_tracked
+from flink_exercise_spark.caching import (
+    local_checkpoint_tracked,
+    persist_tracked,
+)
 from flink_exercise_spark.operators.text import (
     shingles_from_tokens,
     tokens_expr,
@@ -821,11 +824,11 @@ def connected_components(
         # is the standard one: localCheckpoint blocks don't survive
         # executor loss — a production run on a real cluster uses
         # reliable checkpointing (sc.setCheckpointDir) at the same
-        # call site.
-        new_labels = (
-            stepped.groupBy("doc_id")
-            .agg(*agg_exprs)
-            .localCheckpoint(eager=False)
+        # call site. Tracked, so the next registry query (or
+        # release_persisted) frees every round's blocks instead of
+        # leaving them to JVM GC; the result's action must run first.
+        new_labels = local_checkpoint_tracked(
+            stepped.groupBy("doc_id").agg(*agg_exprs)
         )
         # Fixpoint ⟺ every vertex and all its neighbors already share
         # one label ⟺ min == max of the agg inputs (own label ∪

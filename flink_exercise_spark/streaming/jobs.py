@@ -297,33 +297,25 @@ class ForeachBatchTopHost:
         )
 
     def top_per_window(self) -> dict[int, tuple[int, int]]:
-        """window_start -> (user_id, n_requests); ties to lowest user."""
-        best: dict[int, tuple[int, int]] = {}
-        for (w, u), n in sorted(self.store.items()):
-            if w not in best or n > best[w][1]:
-                best[w] = (u, n)
-        return best
+        """window_start -> (user_id, n_requests); ties to the highest
+        user, as batch Q1 (``aggregates.top_host_per_window``)."""
+        best: dict[int, tuple[int, int]] = {}  # window -> (n, user)
+        for (w, u), n in self.store.items():
+            best[w] = max(best.get(w, (n, u)), (n, u))
+        return {w: (u, n) for w, (n, u) in best.items()}
 
     def run(
-        self, counts: DataFrame, timeout_sec: int = 120,
+        self, counts: DataFrame, timeout_sec: int | None = None,
         finalize: bool = True,
     ) -> None:
-        import contextlib
-
-        guard = (
-            _no_finalization_batch(counts.sparkSession)
-            if not finalize
-            else contextlib.nullcontext()
+        """Drain ``counts`` in update mode into the store; raises
+        ``TimeoutError`` like ``run_to_memory`` (same timeout default),
+        because a timed-out run leaves a partial change log."""
+        _drain(
+            counts.writeStream.foreachBatch(self.upsert).outputMode("update"),
+            counts.sparkSession, timeout_sec, finalize,
+            "ForeachBatchTopHost",
         )
-        with guard:
-            q = (
-                counts.writeStream.foreachBatch(self.upsert)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(timeout_sec)
-            q.stop()
 
 
 _NO_DATA_BATCH_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -378,33 +370,44 @@ def run_to_memory(
     timeout, "0 rows" reported as if it were a result). The default
     timeout scales via SPARK_GRAFT_STREAM_TIMEOUT (seconds; fixture
     runs finish in single-digit seconds, sf10+ runs need minutes)."""
+    _drain(
+        df.writeStream.format("memory").queryName(table).outputMode(mode),
+        df.sparkSession, timeout_sec, finalize, table,
+    )
+
+
+def _drain(
+    writer, spark: SparkSession, timeout_sec: int | None, finalize: bool,
+    name: str,
+):
+    """Run ``writer`` to completion under an availableNow trigger (see
+    ``run_to_memory`` for ``finalize`` and the timeout default) and
+    return the stopped query. The query is stopped on every exit:
+    ``awaitTermination`` re-raises a failed batch's exception, and
+    skipping ``stop()`` then leaks the query's state store and listener
+    threads."""
     if timeout_sec is None:
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "120"))
     import contextlib
 
     guard = (
-        _no_finalization_batch(df.sparkSession)
+        _no_finalization_batch(spark)
         if not finalize
         else contextlib.nullcontext()
     )
     with guard:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.trigger(availableNow=True).start()
         try:
             finished = q.awaitTermination(timeout_sec)
         finally:
             q.stop()
     if not finished:
         raise TimeoutError(
-            f"streaming query {table!r} still running after "
+            f"streaming query {name!r} still running after "
             f"{timeout_sec}s — raise SPARK_GRAFT_STREAM_TIMEOUT; its "
             f"sink is incomplete and must not be read"
         )
+    return q
 
 
 # ---------------------------------------------------------------------------

@@ -109,6 +109,20 @@ def test_persists_released_between_registry_queries(spark):
     assert jsc.getPersistentRDDs().size() == 0
 
 
+def test_connected_components_checkpoints_released(spark):
+    """Connected components checkpoints its labels every round; those
+    blocks are tracked like persists, so ``release_persisted`` after
+    the clusters' action leaves no persistent RDD behind."""
+    from flink_exercise_spark.caching import release_persisted
+    from flink_exercise_spark.registry import specs
+    from tests.conftest import SF_SMOKE
+
+    jsc = spark.sparkContext._jsc
+    assert specs()["dedup_near_dup_clusters"].fn(spark, SF_SMOKE).collect()
+    release_persisted()
+    assert jsc.getPersistentRDDs().size() == 0
+
+
 def test_bucket_cap_bounds_identical_doc_blowup(spark):
     """100 identical docs collide in every band bucket: uncapped, the
     band join emits 100*99/2 = 4950 pairs; with the cap the hot buckets

@@ -343,33 +343,160 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert all(not (ws == feb_ws and n == 1) for ws, n in got)
 
 
-def test_foreachbatch_top_host_equals_batch_q1(spark):
+def _json_events_stream(spark, src):
+    """(ts, user_id) events from JSON-lines files of epoch seconds, one
+    file per micro-batch in file-mtime order."""
+    return (
+        spark.readStream.schema("ts long, user_id long")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+        .selectExpr("timestamp_seconds(ts) AS ts", "user_id")
+    )
+
+
+def _write_events(src, k, rows):
+    """File ``k`` of a ``_json_events_stream`` source; mtimes increase
+    with ``k``, which is the order the file source reads them in."""
+    import json
+
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, f"part-{k}.json")
+    with open(path, "w") as f:
+        f.writelines(
+            json.dumps({"ts": ts, "user_id": u}) + "\n" for ts, u in rows
+        )
+    os.utime(path, (1_000_000 + k, 1_000_000 + k))
+
+
+_W31 = 31 * 86400
+
+
+def _top_per_window(df):
+    return {
+        r["window_start"]: (r["top_user"], r["n_requests"])
+        for r in top_host_per_window(df).collect()
+    }
+
+
+def test_foreachbatch_top_host_equals_batch_q1(spark, tmp_path):
     """Streaming Q1 completed via the foreachBatch sink-then-reduce
-    shape must equal the batch arg-max exactly (incl. tie-breaks)."""
+    shape must equal batch Q1 (``top_host_per_window``) exactly, ties
+    included: on the events fixture and on a crafted two-user tie."""
     from flink_exercise_spark.streaming.jobs import ForeachBatchTopHost
 
     sink = ForeachBatchTopHost(driver_dict=True)
     sink.run(windowed_host_counts(events_stream(spark, SF_SMOKE)))
-    got = sink.top_per_window()
+    assert sink.top_per_window() == _top_per_window(
+        load_table(spark, SF_SMOKE, "events")
+    )
 
-    exp = {
-        r["window_start"]: (r["top_user"], r["n_requests"])
-        for r in load_table(spark, SF_SMOKE, "events")
-        .groupBy(
-            F.unix_timestamp(F.window("ts", "31 days")["start"]).alias(
-                "window_start"
-            ),
-            F.col("user_id"),
+    # Users 3 and 5 tie at 2 requests in one window (over two
+    # micro-batches); user 9 wins the other window outright.
+    a = 1_700_000_000 // _W31 * _W31
+    src = str(tmp_path / "tie")
+    _write_events(src, 0, [(a + 1, 5), (a + 2, 3), (a + _W31 + 1, 9)])
+    _write_events(src, 1, [(a + 3, 3), (a + 4, 5), (a + _W31 + 2, 1)])
+    _write_events(src, 2, [(a + _W31 + 3, 9)])
+    tie = ForeachBatchTopHost(driver_dict=True)
+    tie.run(windowed_host_counts(_json_events_stream(spark, src)))
+    assert tie.top_per_window() == {a: (5, 2), a + _W31: (9, 2)}
+    assert tie.top_per_window() == _top_per_window(
+        spark.read.schema("ts long, user_id long").json(src)
+        .selectExpr("timestamp_seconds(ts) AS ts", "user_id")
+    )
+
+
+def test_foreachbatch_run_timeout_raises_and_stops(spark):
+    """A run that outlives its timeout leaves a partial change log:
+    ``run`` must raise, and must stop the query on the way out."""
+    from flink_exercise_spark.streaming.jobs import ForeachBatchTopHost
+
+    class SlowSink(ForeachBatchTopHost):
+        def upsert(self, batch_df, batch_id):
+            time.sleep(3)
+
+    sink = SlowSink(driver_dict=True)
+    with pytest.raises(TimeoutError, match="incomplete"):
+        sink.run(
+            windowed_host_counts(events_stream(spark, SF_SMOKE)),
+            timeout_sec=1,
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("window_start")
-        .agg(
-            F.expr("max_by(user_id, struct(n, -user_id))").alias("top_user"),
-            F.max("n").alias("n_requests"),
+    assert spark.streams.active == []
+
+
+def test_stateful_stream_restarts_from_checkpoint(spark, tmp_path):
+    """Windowed counts with a 12-hour watermark, stopped after two files
+    and restarted from the same checkpoint after a third arrives, must
+    resolve to the counts of one uninterrupted run: restored state
+    (user 7 keeps counting across the restart) and the restored
+    watermark (the three planted first-window rows are dropped). The
+    state store keeps Spark's checkpoint checksums beside every delta
+    file."""
+    from flink_exercise_spark.streaming.jobs import (
+        ForeachBatchTopHost,
+        _drain,
+    )
+
+    a = 1_700_000_000 // _W31 * _W31
+    b = a + _W31
+    files = [
+        [(a + 10, 1), (a + 20, 2), (b + 2 * 86400, 7)],
+        [(b + 3 * 86400, 7), (b + 3 * 86400, 8)],
+        # planted late rows: first window, behind the watermark
+        [(a + 100, 1), (a + 200, 3), (a + 300, 4), (b + 4 * 86400, 7)],
+    ]
+
+    def drain(src, ck, store):
+        writer = (
+            windowed_host_counts(_json_events_stream(spark, src), "12 hours")
+            .writeStream.foreachBatch(
+                ForeachBatchTopHost(store_path=store).upsert
+            )
+            .outputMode("update")
+            .option("checkpointLocation", ck)
         )
-        .collect()
-    }
-    assert got == exp
+        q = _drain(writer, spark, 120, True, "restart_probe")
+        return sum(
+            op.numRowsDroppedByWatermark
+            for p in q.recentProgress
+            for op in p.stateOperators
+        )
+
+    def resolved(store):
+        return {
+            tuple(r)
+            for r in ForeachBatchTopHost(store_path=store)
+            .resolved_counts(spark)
+            .collect()
+        }
+
+    src, ck, store = (str(tmp_path / d) for d in ("src", "ck", "store"))
+    once_src, once_store = str(tmp_path / "once"), str(tmp_path / "once_q")
+    for k, rows in enumerate(files):
+        _write_events(once_src, k, rows)
+    for k in (0, 1):
+        _write_events(src, k, files[k])
+    # Two state partitions keep this short: each one is a task in every
+    # micro-batch.
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        assert drain(src, ck, store) == 0
+        _write_events(src, 2, files[2])
+        assert drain(src, ck, store) == 3
+        assert drain(once_src, str(tmp_path / "once_ck"), once_store) == 3
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    want = {(a, 1, 1), (a, 2, 1), (b, 7, 3), (b, 8, 1)}
+    assert resolved(store) == resolved(once_store) == want
+    state = os.path.join(ck, "state", "0")
+    parts = [p for p in os.listdir(state) if p != "_metadata"]
+    assert parts
+    for part in parts:
+        names = set(os.listdir(os.path.join(state, part)))
+        deltas = {n for n in names if n.endswith(".delta")}
+        assert deltas and {d + ".crc" for d in deltas} <= names, part
 
 
 def test_foreachbatch_parquet_store_equals_dict_store(spark, tmp_path):
