@@ -156,19 +156,18 @@ def main(argv: list[str] | None = None) -> int:
             q3 = logs.groupBy(win_start("ts", args.window)).agg(
                 floor_avg("reply_bytes").alias("avg_reply_bytes")
             )
-            queries = [
-                counts.writeStream.queryName(LABELS["q1"])
-                .outputMode("update").format("console")
-                .trigger(availableNow=True).start(),
-                q2.writeStream.queryName(LABELS["q2"])
-                .outputMode("complete").format("console")
-                .trigger(availableNow=True).start(),
-                q3.writeStream.queryName(LABELS["q3"])
-                .outputMode("complete").format("console")
-                .trigger(availableNow=True).start(),
-            ]
-            for q in queries:
-                q.awaitTermination()
+            from flink_exercise_spark.streaming.jobs import _drain
+
+            for label, df, mode in (
+                (LABELS["q1"], counts, "update"),
+                (LABELS["q2"], q2, "complete"),
+                (LABELS["q3"], q3, "complete"),
+            ):
+                _drain(
+                    df.writeStream.queryName(label).outputMode(mode)
+                    .format("console"),
+                    spark, None, True, label,
+                )
         else:
             q1, q2, q3 = batch_queries(logs, args.window)
             for label, df in (

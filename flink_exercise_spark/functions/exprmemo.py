@@ -17,10 +17,15 @@ Rules for call sites (the r13 lessons, measured):
 - STATIC keys only — key on the builder's value-affecting parameters,
   never on DataFrames or plans (the semanticHash-keyed variant was
   measured a net loss in r13).
-- Any non-deterministic expression MUST carry a pinned seed
-  (``F.rand(seed=0)``): an unseeded rand draws a fresh seed per build,
-  which is exactly what a memo must not freeze — and per-plan fresh
-  seeds also force a codegen recompile per build (~0.5 s, r13).
+- A non-deterministic expression must not depend on a seed. An
+  unseeded rand draws a fresh seed per build, which is exactly what a
+  memo must not freeze, and forces a codegen recompile per build
+  (~0.5 s, r13). A pinned ``F.rand(seed=0)`` is stable across batch
+  builds only: each streaming micro-batch re-seeds every random
+  expression, so the generated source still changes per batch (6
+  Janino compiles per 3-batch CLF drain, 19-32 ms each). Use a
+  seedless one such as ``F.spark_partition_id()`` (as parse_clf's
+  barriers do).
 - Memoized lists are shared objects: callers must not mutate them
   (pass straight to ``select(*...)``/``agg(*...)``).
 """

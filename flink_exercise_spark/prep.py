@@ -289,7 +289,7 @@ def run_streaming_prep(
         stream_jsonl_documents,
     )
     from flink_exercise_spark.streaming.ingest import ingest_data_prep
-    from flink_exercise_spark.streaming.jobs import tracked_tempdir
+    from flink_exercise_spark.streaming.jobs import _drain, tracked_tempdir
 
     valid, corrupt = stream_jsonl_documents(spark, input_path)
     if decontaminate_path:
@@ -300,20 +300,15 @@ def run_streaming_prep(
 
     n_corrupt = None
     if audit_path:
-        aq = (
+        _drain(
             corrupt.writeStream.format("parquet")
             .option("path", audit_path)
             .option(
                 "checkpointLocation", tracked_tempdir("prep_audit_ckpt_")
             )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            spark, None, True, "prep_audit",
         )
-        try:
-            aq.awaitTermination()
-        finally:
-            aq.stop()
         n_corrupt = spark.read.parquet(audit_path).count()
 
     store = ingest_data_prep(

@@ -93,12 +93,19 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
     #    and every validity filter reads ``host``.
     # Both barriers must stay arithmetic: Catalyst folds the
     # ``CASE WHEN rand(0) >= 0 THEN x ELSE ... END`` form away, but not
-    # rand*0.0. rand(seed=0), NOT rand(): an unseeded rand draws a fresh
-    # seed at every plan build, so two builds of the same query produce
-    # different codegen source and every execution pays a whole-stage
-    # codegen + JIT recompile (~0.5 s, measured). A pinned seed keeps
-    # the expression non-deterministic while the generated code stays
-    # byte-identical across builds — codegen cache hit.
+    # an arithmetic product. The barrier is ``spark_partition_id() * 0``
+    # and carries no seed. SparkPartitionID is Nondeterministic, so it
+    # blocks both pushdowns, but it is not an ExpressionWithRandomSeed:
+    # its generated code reads the task's partitionIndex, so the source
+    # is the same in every build. A seeded ``rand(seed=0) * 0.0`` is
+    # stable only across batch builds. A streaming micro-batch re-seeds
+    # every random expression (IncrementalExecution), so the seed
+    # literal in the whole-stage source changed per batch and Janino
+    # recompiled the scan+parse stage each time: 6 compiles per 3-batch
+    # clf_stream benchmark pass, 19-32 ms each, every new class starting
+    # out interpreted. Measured on 4 cores (traced, median of seeds
+    # 1-3): stream.add_batch_s 1.22 -> 1.01 s and task CPU 0.60 ->
+    # 0.51 s per pass; each row also stops drawing two random values.
     # The three expression trees are memoized per input column name
     # (functions/exprmemo.py): ~0.2 s of py4j construction per call,
     # paid once per process instead of once per parse.
@@ -129,7 +136,7 @@ def parse_clf(raw: DataFrame, column: str = "value") -> DataFrame:
 def _nondeterministic_zero() -> Column:
     """Identically 0, but non-deterministic: the determinism barrier
     (see parse_clf)."""
-    return (F.rand(seed=0) * F.lit(0.0)).cast("int")
+    return F.spark_partition_id() * F.lit(0)
 
 
 def _parse_columns(column: str) -> list[Column]:

@@ -170,7 +170,7 @@ def ingest_data_prep(
     docs: DataFrame,
     eval_grams: DataFrame,
     store_path: str | None = None,
-    timeout_sec: int = 120,
+    timeout_sec: int | None = None,
     html: bool = False,
 ) -> str:
     """The LLM data-prep front door as ONE streaming job: arriving
@@ -211,7 +211,7 @@ def ingest_data_prep(
         quality_language_features,
     )
     from flink_exercise_spark.operators.text import tokens_expr
-    from flink_exercise_spark.streaming.jobs import tracked_tempdir
+    from flink_exercise_spark.streaming.jobs import _drain, tracked_tempdir
 
     path = store_path or tracked_tempdir("ingest_prep_")
 
@@ -248,25 +248,17 @@ def ingest_data_prep(
         out.write.mode("append").parquet(path)
 
     deduped = streaming_exact_dedup(docs)
-    q = (
-        deduped.writeStream.foreachBatch(prep_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # try/finally, not sequential stop: awaitTermination re-raises a
-    # failed batch's StreamingQueryException, and skipping stop() then
-    # leaks the query's state store + listener threads (ADVICE r6).
     try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"ingest_data_prep did not drain within {timeout_sec}s; "
-            f"PARTIAL store at {path} — rerun with a fresh store_path "
-            f"(per-batch appends are not checkpointed, so a retry into "
-            f"the same path would duplicate rows)"
+        _drain(
+            deduped.writeStream.foreachBatch(prep_batch),
+            deduped.sparkSession, timeout_sec, True, "ingest_data_prep",
         )
+    except TimeoutError as e:
+        raise TimeoutError(
+            f"{e}; PARTIAL store at {path} — rerun with a fresh "
+            f"store_path (per-batch appends are not checkpointed, so a "
+            f"retry into the same path would duplicate rows)"
+        ) from e
     return path
 
 

@@ -385,7 +385,8 @@ def _drain(
     return the stopped query. The query is stopped on every exit:
     ``awaitTermination`` re-raises a failed batch's exception, and
     skipping ``stop()`` then leaks the query's state store and listener
-    threads."""
+    threads. Every stream the package starts is awaited here and
+    nowhere else (``test_streams_are_awaited_only_in_drain``)."""
     if timeout_sec is None:
         timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "120"))
     import contextlib

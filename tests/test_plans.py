@@ -169,9 +169,12 @@ def test_clf_valid_filter_does_not_redrive_regex(spark):
     sf0.1 round-trip).
 
     SPARK-UPGRADE COUPLING: parse_clf has two determinism barriers,
-    both an arithmetic ``rand(seed=0) * 0.0`` term that relies on
-    Catalyst NOT constant-folding rand*0 (it does fold the
-    ``CASE WHEN rand(0) >= 0`` form, so neither may become a CASE).
+    both an arithmetic ``spark_partition_id() * 0`` term that relies
+    on Catalyst NOT constant-folding a non-deterministic product (it
+    does fold the ``CASE WHEN rand(0) >= 0`` form, so neither may
+    become a CASE). The term is seedless on purpose: a streaming
+    micro-batch re-seeds every ``rand``, which recompiled the parse
+    stage per batch (test_clf_stream_reuses_compiled_parse).
     The ``_p`` barrier (split limit) blocks the regex re-drive: the
     RLIKE/regexp_replace counts and the Filter-above-Exchange assertion
     below fail without it (10.2 s vs 0.85 s of task CPU for the

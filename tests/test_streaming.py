@@ -29,6 +29,20 @@ def _rows(spark, sql):
     return {tuple(r) for r in spark.sql(sql).collect()}
 
 
+def _stamp(path, k):
+    """Give ``path`` (a file, or every file under a directory) the
+    mtime ``1_000_000 + k`` seconds: the file source reads files in
+    mtime order, so stamping file ``k`` orders the micro-batches
+    without sleeping between writes."""
+    files = (
+        [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+        if os.path.isdir(path)
+        else [path]
+    )
+    for f in files:
+        os.utime(f, (1_000_000 + k, 1_000_000 + k))
+
+
 def test_q1_counts_stream_equals_batch(spark):
     stream = windowed_host_counts(events_stream(spark, SF_SMOKE))
     run_to_memory(stream, "q1_counts", "complete")
@@ -229,18 +243,12 @@ def test_stream_static_enrichment_join_equals_batch(spark):
 # slow (r12 suite-trim): heavy exhaustive/statistical run; the
 # default loop keeps test_streaming_ingest's horizon-readmit twin
 @pytest.mark.slow
-def test_dedup_within_watermark_bounds_state(spark):
+def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark: state is evicted past the
     watermark delay, so a key recurring AFTER the horizon is re-emitted
     — the bounded-state dedup mode SCALE.md prescribes for churning
     keys (vs the reference's unbounded per-key Set)."""
-    import os
-    import time as _time
-
-    src = os.path.join(str(spark.conf.get("spark.sql.warehouse.dir", "/tmp")),
-                       f"ddww_{os.getpid()}")
-    src = f"/tmp/ddww_{os.getpid()}"
-    os.makedirs(src, exist_ok=True)
+    src = str(tmp_path / "ddww")
     # b0: key 1 first seen (jan). b1/b2: other keys far ahead advance
     # the watermark past key 1's expiry — eviction applies with one
     # batch of lag (measured on Spark 4.1: a duplicate arriving in the
@@ -255,7 +263,7 @@ def test_dedup_within_watermark_bounds_state(spark):
     for i, rows in enumerate(batches):
         spark.createDataFrame(rows, "ts timestamp, user_id long") \
             .coalesce(1).write.mode("overwrite").parquet(f"{src}/b{i}")
-        _time.sleep(1.1)
+        _stamp(f"{src}/b{i}", i)
 
     stream = (
         spark.readStream.schema("ts timestamp, user_id long")
@@ -307,8 +315,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         spark.createDataFrame(rows, "ts timestamp, user_id long").coalesce(
             1
         ).write.mode("overwrite").parquet(os.path.join(src, name))
-        # distinct mtimes => deterministic file-source ordering
-        time.sleep(1.1)
+        _stamp(os.path.join(src, name), int(name[1:]))
 
     jan = dt.datetime(2024, 1, 10)
     feb_late = dt.datetime(2024, 2, 25)
@@ -365,7 +372,7 @@ def _write_events(src, k, rows):
         f.writelines(
             json.dumps({"ts": ts, "user_id": u}) + "\n" for ts, u in rows
         )
-    os.utime(path, (1_000_000 + k, 1_000_000 + k))
+    _stamp(path, k)
 
 
 _W31 = 31 * 86400
@@ -680,7 +687,7 @@ def test_session_windows_stream_merges_across_batches(spark, tmp_path):
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(src, name)
         )
-        time.sleep(1.1)  # distinct mtimes => deterministic ordering
+        _stamp(os.path.join(src, name), int(name[1:]))
 
     t0 = dt.datetime(2024, 5, 1, 12, 0, 0)
     m = dt.timedelta(minutes=1)
@@ -707,3 +714,104 @@ def test_session_windows_stream_merges_across_batches(spark, tmp_path):
     # (same start, all three events), and the past-gap event opened
     # its own session — nothing else
     assert got == {(1, ts0, 3, 7.0), (1, ts0 + 120 * 60, 1, 8.0)}
+
+
+def _compiles(spark) -> int:
+    """Whole-stage codegen classes Janino has compiled in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_clf_stream_reuses_compiled_parse(spark, tmp_path):
+    """A second drain of the same CLF stream, and a second batch build
+    over the same files, compile no new codegen class. Spark re-seeds
+    every random expression per micro-batch, so a seeded ``rand``
+    barrier in ``parse_clf`` changed the generated source of the
+    scan+parse stage in every batch and recompiled it (6 compiles per
+    3-file drain); the seedless barrier keeps it byte-identical."""
+    from flink_exercise_spark.__main__ import batch_queries
+    from flink_exercise_spark.sources.clf import parse_clf, valid_lines
+    from flink_exercise_spark.streaming.jobs import ForeachBatchTopHost
+
+    src = str(tmp_path / "clf")
+    os.makedirs(src)
+    want: dict[tuple[int, str], int] = {}
+    for k in range(3):
+        lines = ["garbage line"]
+        for i in range(12):
+            t = dt.datetime(1995, 7, 20 + 4 * k, i, tzinfo=dt.timezone.utc)
+            host = f"h{(i * (k + 1)) % 5}.net"
+            lines.append(
+                f'{host} - - [{t:%d/%b/%Y:%H:%M:%S} +0000] '
+                f'"GET /p{i} HTTP/1.0" 200 {10 * i}'
+            )
+            key = (int(t.timestamp()) // _W31 * _W31, host)
+            want[key] = want.get(key, 0) + 1
+        path = os.path.join(src, f"part-{k}.log")
+        with open(path, "w") as f:
+            f.write("\n".join(lines) + "\n")
+        _stamp(path, k)
+
+    def drain(store):
+        raw = spark.readStream.option("maxFilesPerTrigger", 1).text(src)
+        events = valid_lines(parse_clf(raw)).withColumnRenamed(
+            "host", "user_id"
+        )
+        sink = ForeachBatchTopHost(store_path=str(tmp_path / store))
+        sink.run(windowed_host_counts(events), finalize=False)
+        return {
+            (r["window_start"], r["user_id"]): r["n_requests"]
+            for r in sink.resolved_counts(spark).collect()
+        }
+
+    first = drain("store0")
+    before = _compiles(spark)
+    second = drain("store1")
+    assert _compiles(spark) - before == 0
+    assert second == first == want
+
+    def batch():
+        q1, q2, q3 = batch_queries(valid_lines(parse_clf(spark.read.text(src))))
+        return [sorted(map(tuple, q.collect())) for q in (q1, q2, q3)]
+
+    first = batch()
+    before = _compiles(spark)
+    assert batch() == first
+    assert _compiles(spark) - before == 0
+
+
+def test_streams_are_awaited_only_in_drain():
+    """No Spark: every stream the package starts is awaited inside
+    ``streaming.jobs._drain``, which applies the timeout, raises
+    ``TimeoutError`` and always stops the query. An await anywhere else
+    is a drain without those guarantees."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "flink_exercise_spark"
+    found = []
+
+    class Awaits(ast.NodeVisitor):
+        def __init__(self, module):
+            self.module, self.scope = module, []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr in (
+                "awaitTermination", "awaitAnyTermination",
+                "processAllAvailable",
+            ):
+                found.append((self.module, ".".join(self.scope)))
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        Awaits(path.relative_to(pkg).as_posix()).visit(
+            ast.parse(path.read_text())
+        )
+    assert found == [("streaming/jobs.py", "_drain")]

@@ -6,6 +6,8 @@ actually bound its state domain (re-admit beyond the horizon)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -153,15 +155,12 @@ def test_bounded_dedup_readmits_beyond_horizon(spark, tmp_path):
         [{"doc_id": base_us + 4 * hour, "text": "advance wm 2"}],
         [{"doc_id": base_us + 4 * hour + 1_000_000, "text": "dup me"}],
     ]
-    import time
-
     for i, rows in enumerate(batches):
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=schema), d / f"b{i}.parquet"
-        )
-        # the file source orders batches by modification time; space the
-        # writes so ordering is deterministic across filesystems
-        time.sleep(1.05)
+        path = d / f"b{i}.parquet"
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+        # the file source orders batches by modification time: stamp
+        # each file one second after the last
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
     stream = (
         spark.readStream.schema(spark.read.parquet(str(d / "b0.parquet")).schema)
         .option("maxFilesPerTrigger", 1)
